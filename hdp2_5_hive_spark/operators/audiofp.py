@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from .multimodal import decode_wav_samples
+from .util import materialize
 
 AUDIO_FP_SCHEMA = StructType(
     [
@@ -90,9 +91,6 @@ def audio_fingerprints(
     )
 
 
-_last_audio_fp = None
-
-
 def audio_near_dups(
     media: DataFrame,
     *,
@@ -109,15 +107,10 @@ def audio_near_dups(
     # Persist the fingerprint table: it feeds both join sides, and
     # its lineage holds the WAV decode + FFT landmark pass (aliased
     # subtrees are not reused — the near_duplicate_pairs audit).
-    # Last-call-only cache, like dedup's.
-    global _last_audio_fp
-    if _last_audio_fp is not None:
-        try:
-            _last_audio_fp.unpersist()
-        except Exception:
-            pass
-    fp = audio_fingerprints(media, frame_len=frame_len, gram=gram).persist()
-    _last_audio_fp = fp
+    fp = materialize(
+        audio_fingerprints(media, frame_len=frame_len, gram=gram),
+        "audiofp.fingerprints",
+    )
     a = fp.select(F.col("media_id").alias("id_a"), "fp").distinct()
     b = fp.select(F.col("media_id").alias("id_b"), "fp").distinct()
     return (

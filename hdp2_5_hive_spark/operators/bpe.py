@@ -204,60 +204,44 @@ def train_bpe(
         # partition frame but makes the single-task invariant LOCAL
         # instead of relying on the 65536 guard matching
         # right_size_loop_frame's rows_per_partition (ADVICE r13).
-        try:
-            rows = words.coalesce(1).mapInPandas(
-                _bpe_loop_kernel(n_merges, min_pair_count),
-                "rank int, left string, right string, cnt long",
-            ).collect()
-            return [
-                (int(r["rank"]), r["left"], r["right"], int(r["cnt"]))
-                for r in sorted(rows, key=lambda r: r["rank"])
-            ]
-        finally:
-            words.unpersist()
+        rows = words.coalesce(1).mapInPandas(
+            _bpe_loop_kernel(n_merges, min_pair_count),
+            "rank int, left string, right string, cnt long",
+        ).collect()
+        return [
+            (int(r["rank"]), r["left"], r["right"], int(r["cnt"]))
+            for r in sorted(rows, key=lambda r: r["rank"])
+        ]
     merges: list[tuple[int, str, str, int]] = []
-    # prev = the table the CURRENT words' lazy checkpoint still reads
-    # from; it may be unpersisted only after that checkpoint has
-    # materialized (localCheckpoint truncates lineage — freeing the
-    # parent early would strand the child unrecoverable).
-    prev: DataFrame | None = None
-    try:
-        for rank in range(n_merges):
-            # ONE job per round: the argmax collect below is the first
-            # action on `words`, so a lazily-checkpointed rewrite from
-            # the previous round materializes inside this job — the
-            # separate eager-materialization job per round is gone
-            # (localCheckpoint TRUNCATES lineage either way; persist
-            # alone does not — Catalyst would re-analyze the
-            # ever-growing plan each round, which at production vocab
-            # sizes, 10k-50k merges, becomes the bottleneck; same
-            # discipline as operators/components.py).
-            top = (
-                _pair_counts(words)
-                .orderBy(F.desc("pair_count"), "left", "right")
-                .limit(1)
-                .collect()
-            )
-            if prev is not None:  # checkpoint materialized just now
-                prev.unpersist()
-                prev = None
-            if not top or top[0]["pair_count"] < min_pair_count:
-                break
-            left, right, cnt = (
-                top[0]["left"],
-                top[0]["right"],
-                int(top[0]["pair_count"]),
-            )
-            merges.append((rank, left, right, cnt))
-            nxt = words.mapInPandas(
-                _merge_kernel(left, right), _WORD_SCHEMA
-            ).localCheckpoint(eager=False)
-            prev = words
-            words = nxt
-    finally:
-        words.unpersist()
-        if prev is not None:
-            prev.unpersist()
+    for rank in range(n_merges):
+        # ONE job per round: the argmax collect below is the first
+        # action on `words`, so a lazily-checkpointed rewrite from the
+        # previous round materializes inside this job — the separate
+        # eager-materialization job per round is gone (localCheckpoint
+        # TRUNCATES lineage either way; persist alone does not —
+        # Catalyst would re-analyze the ever-growing plan each round,
+        # which at production vocab sizes, 10k-50k merges, becomes the
+        # bottleneck; same discipline as operators/components.py).
+        # Each round's checkpoint blocks are freed by the
+        # ContextCleaner once its frame is garbage-collected;
+        # ``unpersist`` does not release a local checkpoint.
+        top = (
+            _pair_counts(words)
+            .orderBy(F.desc("pair_count"), "left", "right")
+            .limit(1)
+            .collect()
+        )
+        if not top or top[0]["pair_count"] < min_pair_count:
+            break
+        left, right, cnt = (
+            top[0]["left"],
+            top[0]["right"],
+            int(top[0]["pair_count"]),
+        )
+        merges.append((rank, left, right, cnt))
+        words = words.mapInPandas(
+            _merge_kernel(left, right), _WORD_SCHEMA
+        ).localCheckpoint(eager=False)
     return merges
 
 

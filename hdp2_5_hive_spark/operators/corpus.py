@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import shingles_col, words_col
+from .util import materialize
 
 
 def kgrams_from_words(w: Column, k: int) -> Column:
@@ -150,11 +151,6 @@ def decontaminate(
 # filter, ~5 bits/element headroom for a million-gram eval suite.
 BLOOM_M_BITS = 1 << 20
 BLOOM_K = 5
-# Last call's persisted gram-hash tables (dedup._last_* discipline:
-# single-threaded last-call-wins; next entry unpersists).
-_last_bloom_tables: list = []
-# span_mask's last persisted (id, pos, h) gram table (same contract).
-_last_span_grams = None
 # Odd 64-bit multipliers (golden-ratio family); odd ⇒ bijective
 # mod 2^64, so the k probes stay decorrelated.
 _BLOOM_MULTS = (
@@ -257,33 +253,28 @@ def decontaminate_bloom(
     property is pinned in tests/test_corpus.py). The confirm join's
     input is tiny post-filter, which is the whole point at 100 TB.
 
-    Both hash tables are persisted for the run (last-call-only, the
-    dedup._last_* discipline — single-threaded last-call-wins): the
-    corpus grams feed the per-doc totals AND the probe/confirm path,
-    and the eval hashes feed the filter build (an action) AND the
-    confirm semi join — without the persists each explode+xxhash64
-    pass ran twice per query at any scale."""
+    Both hash tables are persisted for the run (last call only,
+    ``util.materialize``): the corpus grams feed the per-doc totals
+    AND the probe/confirm path, and the eval hashes feed the filter
+    build (an action) AND the confirm semi join — without the
+    persists each explode+xxhash64 pass ran twice per query at any
+    scale."""
     from .util import ensure_parallelism
 
-    global _last_bloom_tables
-    for prev in _last_bloom_tables:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _last_bloom_tables = []
-    grams = ensure_parallelism(corpus).select(
-        F.col(id_col),
-        F.explode(shingles_col(F.col(text_col), k)).alias("gram"),
-    ).select(id_col, F.xxhash64("gram").alias("gh")).persist()
-    eval_hashes = (
+    grams = materialize(
+        ensure_parallelism(corpus).select(
+            F.col(id_col),
+            F.explode(shingles_col(F.col(text_col), k)).alias("gram"),
+        ).select(id_col, F.xxhash64("gram").alias("gh")),
+        "corpus.bloom_grams",
+    )
+    eval_hashes = materialize(
         ensure_parallelism(eval_df)
         .select(F.explode(shingles_col(F.col(text_col), k)).alias("gram"))
         .select(F.xxhash64("gram").alias("gh"))
-        .distinct()
-        .persist()
+        .distinct(),
+        "corpus.bloom_eval_hashes",
     )
-    _last_bloom_tables = [grams, eval_hashes]
     bloom = bloom_build(eval_hashes, m_bits=m_bits)
     candidates = grams.filter(bloom_contains_col(bloom, m_bits)(F.col("gh")))
     confirmed = candidates.join(eval_hashes, "gh", "left_semi")
@@ -1017,24 +1008,20 @@ def span_mask(
     rebuild is one doc-keyed aggregate with an in-place
     ``array_sort`` — order restored per doc without a sort shuffle.
     """
-    global _last_span_grams
     w = words_col(F.col(text_col))
     toks0 = df.select(F.col(id_col).alias("_id"), w.alias("_w"))
     # Persist the narrow (id, pos, h) gram table: it feeds the dup-set
     # aggregate AND the cover join, so without the persist the k-gram
-    # posexplode + hash ran twice per action (last-call-only cache;
-    # r14 A/B at sf0.1: 2.4s -> 2.1s warm, and one corpus-wide gram
-    # explode saved per action at any scale).
-    if _last_span_grams is not None:
-        try:
-            _last_span_grams.unpersist()
-        except Exception:
-            pass
-    grams = toks0.select(
-        "_id",
-        F.posexplode(kgrams_from_words(F.col("_w"), k)).alias("pos", "gram"),
-    ).select("_id", "pos", F.xxhash64("gram").alias("h")).persist()
-    _last_span_grams = grams
+    # posexplode + hash ran twice per action (r14 A/B at sf0.1: 2.4s
+    # -> 2.1s warm, and one corpus-wide gram explode saved per action
+    # at any scale).
+    grams = materialize(
+        toks0.select(
+            "_id",
+            F.posexplode(kgrams_from_words(F.col("_w"), k)).alias("pos", "gram"),
+        ).select("_id", "pos", F.xxhash64("gram").alias("h")),
+        "corpus.span_grams",
+    )
     dup_h = (
         grams.groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))

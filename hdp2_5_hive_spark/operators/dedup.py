@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import materialize
+
 # ---------------------------------------------------------------------------
 # tokenization / shingling
 # ---------------------------------------------------------------------------
@@ -99,27 +101,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # Odd multipliers/offsets for the permutation family h_i = a_i*h + b_i
 # (mod 2^64, Java long wrap). Derived from splitmix64-style constants;
 # fixed seeds → reproducible on any cluster.
-# Last call's persisted prefix-join tables (same discipline as
-# _last_shingles below): unpersisted on the next entry.
-# CONTRACT (all _last_* caches in this module): single-threaded
-# last-call-wins. The next entry unpersists the previous call's
-# table even if the previous call's returned lazy DataFrame has not
-# executed yet — interleaved/concurrent use silently recomputes the
-# lineage (correctness unaffected; perf only), and the globals are
-# not thread-safe.
-_last_prefix_tables: list = []
-
-
-def _unpersist_prefix_tables() -> None:
-    global _last_prefix_tables
-    for prev in _last_prefix_tables:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _last_prefix_tables = []
-
-
 _PERM_A = 0x9E3779B97F4A7C15
 _PERM_B = 0xBF58476D1CE4E5B9
 
@@ -208,7 +189,6 @@ def lsh_candidate_pairs(
     effectively exhaustive recall above any dedup threshold, while
     only same-bucket pairs are ever enumerated.
     """
-    global _last_band_table
     with_sig = _signatures_from_shingles(
         _shingle_table(df, id_col, text_col, shingle_k), num_hashes
     )
@@ -216,14 +196,10 @@ def lsh_candidate_pairs(
     # subtrees are not reused (the near_duplicate_pairs audit), so
     # without the persist the whole shingle+signature pipeline — the
     # dominant cost — ran twice per action. Narrow (id, band, bucket)
-    # rows; last-call-only cache (single-threaded last-call-wins).
-    if _last_band_table is not None:
-        try:
-            _last_band_table.unpersist()
-        except Exception:
-            pass
-    bands = _banded_buckets(with_sig, num_hashes, rows_per_band).persist()
-    _last_band_table = bands
+    # rows.
+    bands = materialize(
+        _banded_buckets(with_sig, num_hashes, rows_per_band), "dedup.lsh_bands"
+    )
     left = bands.select(
         F.col("_id").alias("id_a"), "band", "bucket"
     )
@@ -261,18 +237,6 @@ def _banded_buckets(
     )
 
 
-# Most recent persisted shingle + signature tables (bounded cache —
-# see near_duplicate_pairs docstring).
-_last_shingles: DataFrame | None = None
-_last_signatures: DataFrame | None = None
-# minhash_index's corpus shingle table and near_duplicates_against's
-# batch tables (separate caches: one query legitimately holds both).
-_last_index_tables: list = []
-_last_against_tables: list = []
-# lsh_candidate_pairs' banded bucket table (same contract).
-_last_band_table: DataFrame | None = None
-
-
 def jaccard_prefix_pairs(
     df: DataFrame,
     id_col: str,
@@ -305,14 +269,14 @@ def jaccard_prefix_pairs(
 
     # The shingle table feeds the prefix build, BOTH candidate-join
     # sides and BOTH verify sides; aliased subtrees are not reused, so
-    # without the persist the shingling pass ran ~5x per action
-    # (the near_duplicate_pairs cache discipline, last call only).
-    _unpersist_prefix_tables()
-    sets = ensure_parallelism(df).select(
-        F.col(id_col).alias("_id"),
-        shingles_col(F.col(text_col), shingle_k).alias("_s"),
-    ).filter(F.size("_s") > 0).persist()
-    _last_prefix_tables.append(sets)
+    # without the persist the shingling pass ran ~5x per action.
+    sets = materialize(
+        ensure_parallelism(df).select(
+            F.col(id_col).alias("_id"),
+            shingles_col(F.col(text_col), shingle_k).alias("_s"),
+        ).filter(F.size("_s") > 0),
+        "dedup.prefix_sets",
+    )
     toks = sets.select("_id", F.size("_s").alias("_n"), F.explode("_s").alias("_t"))
     freq = toks.groupBy("_t").agg(F.count("*").alias("_df"))
     # Rarity order (ties broken by token text) → prefix length
@@ -410,21 +374,14 @@ def near_duplicate_pairs(
       pipeline's dominant shuffle — runs twice per action at ANY
       scale.
 
-    Only the most recent call's tables stay cached (the previous ones
-    are unpersisted on entry), so repeated invocations — the bench
-    loops this query — can't accumulate executor memory for the
-    session's lifetime."""
-    global _last_shingles, _last_signatures
-    for prev in (_last_shingles, _last_signatures):
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
-    sh = _shingle_table(df, id_col, text_col, shingle_k).persist()
-    _last_shingles = sh
-    sig = _signatures_from_shingles(sh, num_hashes).persist()
-    _last_signatures = sig
+    Only the most recent call's tables stay cached
+    (``util.materialize``)."""
+    sh = materialize(
+        _shingle_table(df, id_col, text_col, shingle_k), "dedup.shingles"
+    )
+    sig = materialize(
+        _signatures_from_shingles(sh, num_hashes), "dedup.signatures"
+    )
     bands = _banded_buckets(sig, num_hashes, rows_per_band)
     cands = (
         bands.select(F.col("_id").alias("id_a"), "band", "bucket")
@@ -522,19 +479,14 @@ def minhash_index(
     are plain DataFrames: persist, write to parquet, or register as
     tables; ``near_duplicates_against`` consumes them as-is.
 
-    The shingle table is persisted for the run (last-call-only, the
-    module cache discipline): the bucket output's signature lineage
+    The shingle table is persisted for the run (last call only,
+    ``util.materialize``): the bucket output's signature lineage
     explodes it and the caller's verify join reads it — without the
     persist the tokenize+shingle projection ran once per consumer
     per action."""
-    global _last_index_tables
-    for prev in _last_index_tables:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    sh = _shingle_table(df, id_col, text_col, shingle_k).persist()
-    _last_index_tables = [sh]
+    sh = materialize(
+        _shingle_table(df, id_col, text_col, shingle_k), "dedup.index_shingles"
+    )
     sig = _signatures_from_shingles(sh, num_hashes)
     return sh, _banded_buckets(sig, num_hashes, rows_per_band)
 
@@ -577,22 +529,23 @@ def near_duplicates_against(
     never recomputed.
 
     The batch shingle AND bucket tables are persisted for the run
-    (own last-call-only cache — deliberately NOT via minhash_index,
-    whose cache the caller's corpus-index call may be using): each
-    feeds three consumers (ids/verify/union; two candidate joins +
-    the self-join side), so without the persists the batch signature
-    pipeline ran ~3x per action."""
-    global _last_against_tables
-    for prev in _last_against_tables:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    b_sh = _shingle_table(batch, id_col, text_col, shingle_k).persist()
-    b_buckets = _banded_buckets(
-        _signatures_from_shingles(b_sh, num_hashes), num_hashes, rows_per_band
-    ).persist()
-    _last_against_tables = [b_sh, b_buckets]
+    under their own ``materialize`` keys — deliberately NOT
+    minhash_index's, whose table the caller's corpus-index call may
+    still be using: each feeds three consumers (ids/verify/union; two
+    candidate joins + the self-join side), so without the persists
+    the batch signature pipeline ran ~3x per action."""
+    b_sh = materialize(
+        _shingle_table(batch, id_col, text_col, shingle_k),
+        "dedup.against_shingles",
+    )
+    b_buckets = materialize(
+        _banded_buckets(
+            _signatures_from_shingles(b_sh, num_hashes),
+            num_hashes,
+            rows_per_band,
+        ),
+        "dedup.against_buckets",
+    )
     # Replacement ids must come from the SHINGLE table (one row per
     # batch doc unconditionally), not the bucket table: a re-ingested
     # doc whose new text is too short to shingle produces no

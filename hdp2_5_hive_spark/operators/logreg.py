@@ -155,58 +155,55 @@ def train_logreg(
         F.col(features_col).alias("features"),
         F.col(label_col).cast("double").alias("label"),
     ).localCheckpoint(eager=True)
-    try:
-        total = ckpt.count()
-        if total == 0:
-            raise ValueError("empty training set")
-        # Right-size the n_rounds gradient jobs to the data (guide
-        # §2): the checkpoint keeps the static shuffle layout, so a
-        # small training set would otherwise pay n_rounds ×
-        # shuffle.partitions near-empty Arrow tasks. coalesce is
-        # narrow and never widens — no-op at warehouse scale. The
-        # per-partition partials change grouping, not values: the
-        # sorted-pid reduction stays deterministic and
-        # partition-count invariance is tolerance-pinned in
-        # tests/test_logreg.py.
-        from .util import right_size_loop_frame
+    total = ckpt.count()
+    if total == 0:
+        raise ValueError("empty training set")
+    # Right-size the n_rounds gradient jobs to the data (guide
+    # §2): the checkpoint keeps the static shuffle layout, so a
+    # small training set would otherwise pay n_rounds ×
+    # shuffle.partitions near-empty Arrow tasks. coalesce is
+    # narrow and never widens — no-op at warehouse scale. The
+    # per-partition partials change grouping, not values: the
+    # sorted-pid reduction stays deterministic and
+    # partition-count invariance is tolerance-pinned in
+    # tests/test_logreg.py.
+    from .util import right_size_loop_frame
 
-        rows_per_partition = 32768
-        data = right_size_loop_frame(
-            ckpt, total, rows_per_partition=rows_per_partition
-        )
-        if total <= rows_per_partition:
-            # One partition after the coalesce ⇒ run every round in
-            # the task (see _single_partition_loop: bit-identical).
-            out = data.mapInArrow(
-                _single_partition_loop(dim, n_rounds, lr, l2, total),
-                "w array<double>, b double, mean_loss double",
-            ).collect()
-            r = out[0]
-            return np.asarray(r.w), r.b, r.mean_loss
-        w = np.zeros(dim)
-        b = 0.0
-        mean_loss = float("inf")
-        for _ in range(n_rounds):
-            parts = data.mapInArrow(
-                _partial_kernel(w, b),
-                "pid long, grad array<double>, grad_b double, "
-                "loss double, n long",
-            ).collect()
-            parts.sort(key=lambda r: r.pid)  # deterministic fp order
-            grad = np.zeros(dim)
-            gb = loss = 0.0
-            for r in parts:
-                grad += np.asarray(r.grad)
-                gb += r.grad_b
-                loss += r.loss
-            grad = grad / total + l2 * w
-            gb /= total
-            mean_loss = loss / total + 0.5 * l2 * float(w @ w)
-            w -= lr * grad
-            b -= lr * gb
-        return w, b, mean_loss
-    finally:
-        ckpt.unpersist()
+    rows_per_partition = 32768
+    data = right_size_loop_frame(
+        ckpt, total, rows_per_partition=rows_per_partition
+    )
+    if total <= rows_per_partition:
+        # One partition after the coalesce ⇒ run every round in
+        # the task (see _single_partition_loop: bit-identical).
+        out = data.mapInArrow(
+            _single_partition_loop(dim, n_rounds, lr, l2, total),
+            "w array<double>, b double, mean_loss double",
+        ).collect()
+        r = out[0]
+        return np.asarray(r.w), r.b, r.mean_loss
+    w = np.zeros(dim)
+    b = 0.0
+    mean_loss = float("inf")
+    for _ in range(n_rounds):
+        parts = data.mapInArrow(
+            _partial_kernel(w, b),
+            "pid long, grad array<double>, grad_b double, "
+            "loss double, n long",
+        ).collect()
+        parts.sort(key=lambda r: r.pid)  # deterministic fp order
+        grad = np.zeros(dim)
+        gb = loss = 0.0
+        for r in parts:
+            grad += np.asarray(r.grad)
+            gb += r.grad_b
+            loss += r.loss
+        grad = grad / total + l2 * w
+        gb /= total
+        mean_loss = loss / total + 0.5 * l2 * float(w @ w)
+        w -= lr * grad
+        b -= lr * gb
+    return w, b, mean_loss
 
 
 def predict(

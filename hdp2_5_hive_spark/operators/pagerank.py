@@ -105,8 +105,18 @@ def pagerank(
     once); self-loops participate normally.
 
     ``_in_task``: None (default) auto-selects the single-task kernel
-    when the deduplicated edge list is task-sized; False forces the
-    distributed loop (tests pin parity between the two)."""
+    when the deduplicated edge list is task-sized and has no null
+    endpoint; False forces the distributed loop (tests pin parity
+    between the two).
+
+    Retention: the edge list, node table and every round's ranks are
+    local checkpoints (on the distributed path the edge list is
+    checkpointed twice, before and after the right-size repartition).
+    ``unpersist`` and ``clearCache`` do not free local checkpoint
+    blocks; the ContextCleaner frees them once the frame that owns
+    them is garbage-collected. Superseded checkpoints therefore live
+    until the next JVM GC, and the one the result reads lives as long
+    as the returned frame."""
     spark = edges.sparkSession
     # Materialize the deduplicated edge list ONCE: every round's join
     # referenced the lazy `e`, so each of the n_iter checkpoints
@@ -118,10 +128,21 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n_edges = e.count()  # reads the checkpointed blocks
+    # One job over the checkpointed blocks returns the size AND null
+    # presence: the in-task kernel must not see a null endpoint —
+    # Arrow turns a null in a LongType column into NaN (a node of its
+    # own per edge) and sorted() raises on mixed None/str ids. Null
+    # endpoints take the distributed loop, which tolerates them.
+    sizes = e.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("u").alias("nu"),
+        F.count("v").alias("nv"),
+    ).collect()[0]
+    n_edges = int(sizes["n"])
     if n_edges == 0:
         raise ValueError("pagerank: empty edge list (no nodes)")
-    if n_edges <= 262_144 and _in_task is not False:
+    no_nulls = sizes["nu"] == n_edges and sizes["nv"] == n_edges
+    if n_edges <= 262_144 and no_nulls and _in_task is not False:
         # The deduplicated edge list is task-sized ⇒ run the whole
         # power iteration in ONE task (the k_core/union-find in-task
         # discipline). Measured on the 40-host bench graph: the

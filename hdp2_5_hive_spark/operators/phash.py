@@ -38,11 +38,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .dedup import hamming64
 from .multimodal import decode_ppm_pixels, decode_png_pixels
-
-# Last call's persisted fingerprint tables (dedup's last-cache
-# discipline): unpersisted on the next pair-search entry so repeated
-# invocations can't accumulate executor memory.
-_last_phash_tables: list = []
+from .util import materialize
 
 PHASH_SCHEMA = StructType(
     [
@@ -141,16 +137,12 @@ def phash_near_pairs(hashes: DataFrame, max_distance: int = 6) -> DataFrame:
     The hash table feeds BOTH sides of the band self-join and Catalyst
     does not reuse aliased subtrees (the near_duplicate_pairs audit),
     so without the persist the decode + DCT pHash pass — the dominant
-    cost — ran twice per action. Last-call-only cache, like dedup's
-    (single-threaded last-call-wins contract: the NEXT call to any
-    phash pair op unpersists this table; interleaved use recomputes
-    but stays correct). A DERIVED frame is persisted — never the
-    caller's object, whose own persist/unpersist must stay untouched
-    (ADVICE r13)."""
-    global _last_phash_tables
-    _unpersist_last()
-    hashes = hashes.select("*").persist()
-    _last_phash_tables.append(hashes)
+    cost — ran twice per action. Last call only
+    (``util.materialize``; the two phash pair ops share one key, so
+    the NEXT call to either releases this table). A DERIVED frame is
+    persisted — never the caller's object, whose own persist/unpersist
+    must stay untouched (ADVICE r13)."""
+    hashes = materialize(hashes.select("*"), "phash.pairs")
     bands = hashes.select(
         F.col("media_id"),
         F.col("phash"),
@@ -229,16 +221,6 @@ def video_keyframe_phashes(
     )
 
 
-def _unpersist_last() -> None:
-    global _last_phash_tables
-    for prev in _last_phash_tables:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _last_phash_tables = []
-
-
 def video_near_dups(
     media: DataFrame,
     *,
@@ -259,10 +241,7 @@ def video_near_dups(
     Output: (id_a, id_b, n_matched), id_a < id_b."""
     # Persist the per-keyframe hash table: it feeds both join sides,
     # and its lineage holds the AVI walk + JPEG decode + DCT pass.
-    global _last_phash_tables
-    _unpersist_last()
-    ph = video_keyframe_phashes(media, n_frames).persist()
-    _last_phash_tables.append(ph)
+    ph = materialize(video_keyframe_phashes(media, n_frames), "phash.pairs")
     bands = ph.select(
         "media_id",
         "frame_idx",

@@ -18,9 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hive_compat import pround
 from .dedup import words_col
-
-_last_kn_bigrams = None
-_last_dsir_bucket = None
+from .util import materialize
 
 
 def compression_ratio(
@@ -209,12 +207,6 @@ def dsir_logratio(
     from .features import md5_bucket
     from .util import ensure_parallelism
 
-    global _last_dsir_bucket
-    if _last_dsir_bucket is not None:
-        try:
-            _last_dsir_bucket.unpersist()
-        except Exception:
-            pass
     base = ensure_parallelism(df).select(
         F.col(id_col),
         target_filter.alias("_is_t"),
@@ -246,13 +238,15 @@ def dsir_logratio(
     # (and every upstream stage) ran 3-4× per action — Catalyst does
     # not reuse the exchange across the differently-shaped consumers
     # (same audit result as dedup.near_duplicate_pairs' signature
-    # table). Only the most recent call's table stays cached.
-    doc_bucket = grams.groupBy(
-        F.col(id_col),
-        F.col("_is_t"),
-        md5_bucket(F.col("g"), n_buckets).alias("b"),
-    ).agg(F.count(F.lit(1)).alias("dc")).persist()
-    _last_dsir_bucket = doc_bucket
+    # table).
+    doc_bucket = materialize(
+        grams.groupBy(
+            F.col(id_col),
+            F.col("_is_t"),
+            md5_bucket(F.col("g"), n_buckets).alias("b"),
+        ).agg(F.count(F.lit(1)).alias("dc")),
+        "quality.dsir_doc_bucket",
+    )
 
     # Both bucket models in ONE pass (ct = target subset via a
     # conditional sum — integer-identical to the former filtered
@@ -579,23 +573,14 @@ def kneser_ney_bits(
             .agg(F.count("*").alias("dc"))
         )
 
-    global _last_kn_bigrams
-    if _last_kn_bigrams is not None:
-        try:  # the cached frame may belong to a stopped session
-            _last_kn_bigrams.unpersist()
-        except Exception:
-            pass
     # the bigram model table feeds context marginals, continuation
     # counts, the type total AND the scoring join — persist it
     # (vocab²-bounded, KBs-MBs) or the train-corpus subtree replays
     # four times
-    bigrams = (
-        doc_grams(train)
-        .groupBy("w1", "w2")
-        .agg(F.sum("dc").alias("c12"))
-        .persist()
+    bigrams = materialize(
+        doc_grams(train).groupBy("w1", "w2").agg(F.sum("dc").alias("c12")),
+        "quality.kn_bigrams",
     )
-    _last_kn_bigrams = bigrams
     context = bigrams.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count("*").alias("nf")
     )

@@ -24,13 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import words_col
-
-# Single-slot persisted term index (same bounded-cache contract as
-# dedup._last_shingles): the tf table feeds three consumers (corpus
-# scalars, document frequencies, scoring) — without the persist each
-# one re-runs the tokenize+explode+agg chain. The previous persisted
-# index is dropped on the next build.
-_last_tf: DataFrame | None = None
+from .util import materialize
 
 
 def term_frequencies(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -64,12 +58,11 @@ def bm25_scores(
     # measured in r14 — with only three tf consumers here the eager
     # materialization cost exceeds the replay savings (cold build
     # 3.5s -> 11.1s, warm 2.8s -> 3.4s on retrieval_bm25), the
-    # opposite outcome from rm3's ~11 consumers.
-    global _last_tf
-    if _last_tf is not None:
-        _last_tf.unpersist()
-    tf = term_frequencies(corpus, id_col, text_col).persist()
-    _last_tf = tf
+    # opposite outcome from rm3's ~11 consumers. The tf table feeds
+    # three consumers (corpus scalars, document frequencies, scoring).
+    tf = materialize(
+        term_frequencies(corpus, id_col, text_col), "retrieval.bm25_tf"
+    )
     stats = corpus.select(
         F.count("*").alias("n_docs")
     ).crossJoin(
@@ -144,7 +137,15 @@ def rm3_expand_rescore(
     Scale shape: two broadcast-probe scoring passes over the
     persisted corpus tf table (never shuffling the corpus), a per-
     query WindowGroupLimit for feedback docs and expansion terms —
-    everything that moves is query-sized."""
+    everything that moves is query-sized.
+
+    Retention: the corpus tf table is an eager local checkpoint, not
+    a ``materialize`` persist, so a call does not release the previous
+    call's table, and ``unpersist``/``clearCache`` cannot free it. Its
+    blocks stay on the executors as long as the returned frame is
+    reachable, and until the next JVM GC after that; a long-lived
+    session that keeps several results keeps one corpus-sized tf
+    table per result."""
     from pyspark.sql import Window
 
     # The tf table feeds ~11 subtree copies across the two scoring
@@ -156,8 +157,7 @@ def rm3_expand_rescore(
     # copy's lineage to a block read: warm 10.5s -> 8.5s, cold 18.8s
     # -> 11.0s on a 50-query probe at sf0.1. At warehouse scale this
     # trades one materialization of the term table against ~11 full
-    # corpus re-reads. Blocks are freed by the ContextCleaner once
-    # the frame is unreachable (no module-global reference is kept).
+    # corpus re-reads (retention: see the docstring).
     tf = term_frequencies(corpus, id_col, text_col).localCheckpoint(
         eager=True
     )

@@ -201,9 +201,6 @@ def _salted_buckets(
     )
 
 
-_last_salted: DataFrame | None = None
-
-
 def lsh_bucket_topk(
     df: DataFrame,
     *,
@@ -229,29 +226,24 @@ def lsh_bucket_topk(
 
     The salted bucket table feeds BOTH sides of the self-join and
     Catalyst does not ReuseExchange across the aliased subtrees, so
-    it is persisted for the run (same bounded-cache discipline as
-    dedup.near_duplicate_pairs: the previous call's table is
-    unpersisted on entry) — without it the pandas-UDF bucket
+    it is persisted for the run (last call only,
+    ``util.materialize``) — without it the pandas-UDF bucket
     assignment and the size aggregation run twice per action at any
     scale."""
-    global _last_salted
-    from .util import ensure_parallelism
+    from .util import ensure_parallelism, materialize
 
-    if _last_salted is not None:
-        try:
-            _last_salted.unpersist()
-        except Exception:
-            pass
-    salted = _salted_buckets(
-        ensure_parallelism(df),
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        n_planes=n_planes,
-        max_bucket_rows=max_bucket_rows,
-        n_tables=n_tables,
-    ).persist()
-    _last_salted = salted
+    salted = materialize(
+        _salted_buckets(
+            ensure_parallelism(df),
+            id_col=id_col,
+            vec_col=vec_col,
+            dim=dim,
+            n_planes=n_planes,
+            max_bucket_rows=max_bucket_rows,
+            n_tables=n_tables,
+        ),
+        "similarity.lsh_salted",
+    )
     keys = ["_table", "_bucket", "_salt"]
     a = salted.select(
         F.col("_id").alias("query_id"), F.col("_vec").alias("q_vec"), *keys

@@ -349,7 +349,6 @@ def train_topics(
             ]
         )
         out = dw.coalesce(1).mapInPandas(kernel, schema).collect()
-        dw.unpersist()
         meta = _json.loads(next(r["meta"] for r in out if r["meta"]))
         assign_df = spark.createDataFrame(
             [
@@ -438,7 +437,6 @@ def train_topics(
         r["topic"]: int(r["n"])
         for r in assign.groupBy("topic").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    dw.unpersist()
     model = {
         "counts": counts,
         "doc_counts": doc_counts,

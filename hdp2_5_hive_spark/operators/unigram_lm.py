@@ -323,61 +323,55 @@ def train_unigram_lm(
                 }
             )
 
-        try:
-            # Explicit coalesce(1): no-op on a 1-partition frame,
-            # makes the single-task invariant local (ADVICE r13).
-            rows = words.coalesce(1).mapInPandas(
-                kernel, "rank int, piece string, cnt long, logp double"
-            ).collect()
-            return [
-                (r["piece"], int(r["cnt"]), float(r["logp"]))
-                for r in sorted(rows, key=lambda r: r["rank"])
-            ]
-        finally:
-            words.unpersist()
-    try:
-        seed = seed_pieces(
-            words, max_piece_len=max_piece_len, seed_size=seed_size
-        )
-        logp = _mstep_logp(dict(seed))
-        counts: dict[str, int] = {}
-        for _ in range(n_rounds):
-            counts = _estep_counts(words, logp, max_piece_len)
-            # coverage: chars stay even when Viterbi never used them
-            for p in list(logp):
-                if len(p) == 1 and p not in counts:
-                    counts[p] = 0
-            multi = sorted(
-                ((p, c) for p, c in counts.items() if len(p) > 1),
-                key=lambda pc: (-pc[1], pc[0]),
-            )
-            n_chars = sum(1 for p in counts if len(p) == 1)
-            keep_multi = max(
-                vocab_size - n_chars, int(len(multi) * shrink)
-            )
-            kept = dict(multi[:keep_multi])
-            kept.update(
-                (p, c) for p, c in counts.items() if len(p) == 1
-            )
-            logp = _mstep_logp(kept)
+        # Explicit coalesce(1): no-op on a 1-partition frame, makes
+        # the single-task invariant local (ADVICE r13).
+        rows = words.coalesce(1).mapInPandas(
+            kernel, "rank int, piece string, cnt long, logp double"
+        ).collect()
+        return [
+            (r["piece"], int(r["cnt"]), float(r["logp"]))
+            for r in sorted(rows, key=lambda r: r["rank"])
+        ]
+    seed = seed_pieces(
+        words, max_piece_len=max_piece_len, seed_size=seed_size
+    )
+    logp = _mstep_logp(dict(seed))
+    counts: dict[str, int] = {}
+    for _ in range(n_rounds):
         counts = _estep_counts(words, logp, max_piece_len)
+        # coverage: chars stay even when Viterbi never used them
         for p in list(logp):
             if len(p) == 1 and p not in counts:
                 counts[p] = 0
-        logp = _mstep_logp(counts)
-        final = sorted(
-            ((p, c) for p, c in counts.items() if p in logp),
+        multi = sorted(
+            ((p, c) for p, c in counts.items() if len(p) > 1),
             key=lambda pc: (-pc[1], pc[0]),
         )
-        chars = [(p, c) for p, c in final if len(p) == 1]
-        multi = [(p, c) for p, c in final if len(p) > 1]
-        room = max(vocab_size - len(chars), 0)
-        vocab = sorted(
-            chars + multi[:room], key=lambda pc: (-pc[1], pc[0])
+        n_chars = sum(1 for p in counts if len(p) == 1)
+        keep_multi = max(
+            vocab_size - n_chars, int(len(multi) * shrink)
         )
-        return [(p, c, logp[p]) for p, c in vocab]
-    finally:
-        words.unpersist()
+        kept = dict(multi[:keep_multi])
+        kept.update(
+            (p, c) for p, c in counts.items() if len(p) == 1
+        )
+        logp = _mstep_logp(kept)
+    counts = _estep_counts(words, logp, max_piece_len)
+    for p in list(logp):
+        if len(p) == 1 and p not in counts:
+            counts[p] = 0
+    logp = _mstep_logp(counts)
+    final = sorted(
+        ((p, c) for p, c in counts.items() if p in logp),
+        key=lambda pc: (-pc[1], pc[0]),
+    )
+    chars = [(p, c) for p, c in final if len(p) == 1]
+    multi = [(p, c) for p, c in final if len(p) > 1]
+    room = max(vocab_size - len(chars), 0)
+    vocab = sorted(
+        chars + multi[:room], key=lambda pc: (-pc[1], pc[0])
+    )
+    return [(p, c, logp[p]) for p, c in vocab]
 
 
 def unigram_vocab_table(

@@ -4,6 +4,37 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# owner key -> the frame that owner's last ``materialize`` call persisted
+_materialized: dict[str, DataFrame] = {}
+
+
+def materialize(df: DataFrame, owner: str) -> DataFrame:
+    """Persist ``df`` as ``owner``'s cross-call table and return it,
+    first releasing the table the previous call for ``owner``
+    persisted — so a caller that runs an operator in a loop (the
+    bench, a sweep) holds one copy of each table, never one per call.
+
+    Contract: single-threaded, last call wins. The next call for the
+    same ``owner`` releases this table even if a lazy DataFrame
+    built on it has not executed yet; that frame then recomputes the
+    lineage (same rows, only slower). Tables that one query needs
+    cached together take different ``owner`` keys.
+
+    The previous table is released BEFORE ``df`` is persisted: a
+    same-plan ``unpersist`` after the persist would drop the new
+    cache entry as well (the cache manager matches entries by plan).
+    ``spark.catalog.clearCache()`` also drops every table held here.
+    """
+    prev = _materialized.pop(owner, None)
+    if prev is not None:
+        try:  # the frame may belong to a stopped session
+            prev.unpersist()
+        except Exception:
+            pass
+    df = df.persist()
+    _materialized[owner] = df
+    return df
+
 
 def ensure_parallelism(
     df: DataFrame, min_factor: float = 0.5, *, by: list[str] | None = None

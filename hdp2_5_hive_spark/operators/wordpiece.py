@@ -255,63 +255,49 @@ def train_wordpiece(
         # the task (see _wp_loop_kernel: bit-identical merge table).
         # Explicit coalesce(1): no-op on a 1-partition frame, makes
         # the single-task invariant local (ADVICE r13).
-        try:
-            rows = words.coalesce(1).mapInPandas(
-                _wp_loop_kernel(n_merges, min_pair_count),
-                "rank int, left string, right string, cnt long, score double",
-            ).collect()
-            return [
-                (
-                    int(r["rank"]),
-                    r["left"],
-                    r["right"],
-                    r["left"] + _strip_cont(r["right"]),
-                    int(r["cnt"]),
-                    float(r["score"]),
-                )
-                for r in sorted(rows, key=lambda r: r["rank"])
-            ]
-        finally:
-            words.unpersist()
+        rows = words.coalesce(1).mapInPandas(
+            _wp_loop_kernel(n_merges, min_pair_count),
+            "rank int, left string, right string, cnt long, score double",
+        ).collect()
+        return [
+            (
+                int(r["rank"]),
+                r["left"],
+                r["right"],
+                r["left"] + _strip_cont(r["right"]),
+                int(r["cnt"]),
+                float(r["score"]),
+            )
+            for r in sorted(rows, key=lambda r: r["rank"])
+        ]
     merges: list[tuple[int, str, str, str, int, float]] = []
-    prev: DataFrame | None = None
-    try:
-        for rank in range(n_merges):
-            top = (
-                _pair_and_sym_counts(words)
-                .filter(F.col("pair_count") >= min_pair_count)
-                .orderBy(
-                    F.desc("score"), F.desc("pair_count"), "left", "right"
-                )
-                .limit(1)
-                .collect()
+    for rank in range(n_merges):
+        top = (
+            _pair_and_sym_counts(words)
+            .filter(F.col("pair_count") >= min_pair_count)
+            .orderBy(
+                F.desc("score"), F.desc("pair_count"), "left", "right"
             )
-            if prev is not None:  # lazy checkpoint materialized now
-                prev.unpersist()
-                prev = None
-            if not top:
-                break
-            r = top[0]
-            merged = r["left"] + _strip_cont(r["right"])
-            merges.append(
-                (
-                    rank,
-                    r["left"],
-                    r["right"],
-                    merged,
-                    int(r["pair_count"]),
-                    float(r["score"]),
-                )
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            break
+        r = top[0]
+        merged = r["left"] + _strip_cont(r["right"])
+        merges.append(
+            (
+                rank,
+                r["left"],
+                r["right"],
+                merged,
+                int(r["pair_count"]),
+                float(r["score"]),
             )
-            nxt = words.mapInPandas(
-                _merge_kernel(r["left"], r["right"]), _WORD_SCHEMA
-            ).localCheckpoint(eager=False)
-            prev = words
-            words = nxt
-    finally:
-        words.unpersist()
-        if prev is not None:
-            prev.unpersist()
+        )
+        words = words.mapInPandas(
+            _merge_kernel(r["left"], r["right"]), _WORD_SCHEMA
+        ).localCheckpoint(eager=False)
     return merges
 
 

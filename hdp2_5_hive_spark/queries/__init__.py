@@ -224,303 +224,65 @@ _MODULES = (
 # list IS the round's correctness window — update it per the rotation
 # ledger above each round.
 SAMPLE_FRONT: tuple[str, ...] = (
-    # ---- round-14 window: ROTATED (starting-gun clause (b); the
-    # r13 ledger predicted exactly this window).
-    # Round-13 result: 50/50 hash-green (the 38 r4-era stalest rows
-    # + 12 oldest r5 rows re-proved). Cumulative ledger 419/419
-    # sampled, 409 hash-green, 10 rows-only by design, 0 red.
-    # This window continues the evidence-freshness ratchet: nothing
-    # in the registry needs sampling, so the 50 slots RE-PROVE the
-    # stalest cumulative evidence, oldest first — ALL 35 remaining
-    # queries whose latest driver row is r5-era (fn_* scalar suites,
-    # hiveql_*, sampling, window/text-feature names), then the 15
-    # alphabetically-first r6-era rows (agg_bitmap_index,
-    # ann_lsh_recall, corpus_clean_v3 + corpus ops, ddl ×4,
-    # decontaminate_fuzzy_minhash, dedup_cluster_keep_best,
-    # dedup_incremental ×2) to fill 50. Zero repeats of the r13
-    # window; every name has a registry oracle. After this window
-    # the max cumulative evidence age advances from r5 to r6.
-    # Done criterion: CORRECTNESS_r14 = 50 stalest re-proves
-    # hash-green; max cumulative evidence age r5 -> r6.
-    "fn_char_varchar",
-    "fn_crypto_roundtrip",
-    "fn_date_tail",
-    "fn_datetime_parts",
-    "fn_decimal_division",
-    "fn_format_number",
-    "fn_hash_extra",
-    "fn_in_file",
-    "fn_initcap_elt_field",
-    "fn_interval_arith",
-    "fn_java_hashcode",
-    "fn_mask_suite",
-    "fn_misc_math",
-    "fn_next_day_tz_suite",
-    "fn_reflect_suite",
-    "fn_string_suite2",
-    "fn_uniontype_encoding",
-    "hiveql_cluster_by",
-    "hiveql_distribute_sort",
-    "hiveql_grouping_sets",
-    "hiveql_lateral_view",
-    "hiveql_mapjoin_hint",
-    "hiveql_multi_insert",
-    "hiveql_semi_join",
-    "hiveql_transform",
-    "hiveql_window_topk",
-    "quality_unigram_bits",
-    "sample_percent",
-    "sample_rows",
-    "sample_stratified",
-    "text_hash_features",
-    "virtual_input_file_name",
-    "virtual_row_offset",
-    "win_agg_over",
-    "win_topk_per_group",
-    # ---- the 15 alphabetically-first r6-era rows fill the window.
-    "agg_bitmap_index",
-    "ann_lsh_recall",
-    "corpus_clean_v3",
-    "corpus_mix_temperature",
-    "corpus_shuffle_seeded",
-    "corpus_span_dedup",
-    "corpus_span_mask",
-    "ddl_drop_partition",
-    "ddl_export_import",
-    "ddl_insert_overwrite_partition",
-    "ddl_show_functions",
-    "decontaminate_fuzzy_minhash",
-    "dedup_cluster_keep_best",
-    "dedup_incremental_batch",
-    "dedup_incremental_unordered_ids",
-)
-
-# ---- round-13 window (retired; kept for the rotation ledger).
-_ROUND13_WINDOW: tuple[str, ...] = (
-    # ---- round-13 window: ROTATED (verdict r12 next-round #1).
-    # Round-12 result: 50/50 hash-green (the full r3-era bucket +
-    # 10 oldest r4 rows re-proved). Cumulative ledger 419/419
-    # sampled, 409 hash-green, 10 rows-only by design, 0 red.
-    # This window continues the evidence-freshness ratchet (verdict
-    # r12 #1/#5): nothing in the registry needs sampling, so the 50
-    # slots RE-PROVE the stalest cumulative evidence, oldest first —
-    # ALL 38 queries whose latest driver row is r4-era (dedup /
-    # multimodal / streaming-batch / text-analysis / events /
-    # pack-split names), then the 12 alphabetically-first r5-era
-    # rows (agg sketch/ngram ×4, decontaminate_bloom_prefilter,
-    # dedup ×3, emb_int8_quantize, fmt round-trips ×3) to fill 50.
-    # Zero repeats of the r12 window (starting-gun test (b) clause);
-    # every name has a registry oracle, so the window is pure hash
-    # evidence. After this window the max cumulative evidence age
-    # advances from r4 to r5; the remaining 35 r5 rows + the 15
-    # oldest r6 rows are round 14's window (verdict r12 #5: nothing
-    # older than r6 survives round 14).
-    # Done criterion: CORRECTNESS_r13 = 50 stalest re-proves
-    # hash-green; max cumulative evidence age r4 -> r5.
-    "dedup_components",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_keep_list",
-    "dedup_near_minhash",
-    "dedup_ngram_jaccard",
-    "events_asof_join",
-    "events_rollup_daily",
-    "events_sessionize",
-    "json_extract",
-    "json_tuple_fields",
-    "multimodal_audio_spectrogram",
-    "multimodal_audio_stats",
-    "multimodal_decode_stats",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_jpeg_stats",
-    "multimodal_meta",
-    "multimodal_png_stats",
-    "multimodal_resize",
-    "multimodal_video_frames",
-    "pack_bin_stats",
-    "pack_sequences_ctx512",
-    "q12_priority_case_agg",
-    "retrieval_bm25",
-    "split_train_holdout",
-    "stream_dedup_first",
-    "stream_interval_join",
-    "stream_session_window",
-    "stream_sliding_counts",
-    "stream_tumbling_counts",
-    "text_langid",
-    "text_profile",
-    "text_redact_pii",
-    "text_repetition_stats",
-    "text_rolling_fingerprint",
-    "text_token_counts",
-    "vocab_top_ngrams",
-    # ---- the 12 alphabetically-first r5-era rows fill the window.
-    "agg_context_ngrams",
-    "agg_histogram_numeric",
-    "agg_hll_sketch",
-    "agg_ngrams",
-    "decontaminate_bloom_prefilter",
-    "dedup_components_star",
-    "dedup_hash_cosine",
+    # ---- round-15 window: ROTATED (starting-gun clause (b)).
+    # Round-14 result: 50/50 hash-green (35 r5-era + 15 r6-era rows
+    # re-proved); cumulative ledger 419/419 sampled, 0 red.
+    # First the six round-14 optimizations that touch semantics
+    # (in-task pagerank, PPJoin positional filter, rm3 tf checkpoint,
+    # simhash/LSH band persists, containment length bound, bloom
+    # hash persists), so the sampled window proves them.
+    "graph_pagerank_hosts",
     "dedup_jaccard_prefix",
-    "emb_int8_quantize",
-    "fmt_csv_round_trip",
-    "fmt_sequencefile_round_trip",
-    "fmt_text_serde_round_trip",
-)
-
-# ---- round-12 window (retired; kept for the rotation ledger).
-_ROUND12_WINDOW: tuple[str, ...] = (
-    # ---- round-12 window: ROTATED (verdict r11 next-round #1).
-    # Round-11 result: 50/50 hash-green — the 8 staged oracle
-    # upgrades landed as driver HASH evidence and the 42 stalest
-    # (r2-era) rows all re-proved. Cumulative ledger 419/419
-    # sampled, 409 hash-green, 10 rows-only by design, 0 red.
-    # This window is pure evidence-freshness ratchet (verdict r11
-    # #1/#5): nothing in the registry needs sampling, so the 50
-    # slots RE-PROVE the stalest cumulative evidence, oldest first —
-    # ALL 40 queries whose latest driver row is r3-era (formats /
-    # functions / subqueries / lateral / set-ops / extensions era
-    # names), then the 10 alphabetically-first r4-era rows (acid ×2,
-    # agg_approx_distinct, ann ×2, corpus ×3, ddl_persistent_catalog,
-    # decontaminate_eval_overlap) to fill 50. Zero repeats of the
-    # r11 window (starting-gun test (b) clause). After this window
-    # the max evidence age advances from r3 to r4; the remaining 38
-    # r4 rows + oldest r5 rows are round 13's window (verdict r11
-    # #5: nothing older than r5 survives two more rounds).
-    # Round-12 result: 50/50 hash-green; max age advanced r3 -> r4.
-    "cte_chain",
-    "distinct_projection",
-    "distribute_sort_by",
-    "explode_outer_empty",
-    "explode_words",
-    "fmt_avro_round_trip",
-    "fmt_concatenate_compact",
-    "fmt_dynamic_partition_sink",
-    "fmt_multi_insert",
-    "fmt_orc_round_trip",
-    "fmt_smb_bucketed_join",
-    "fn_bitwise",
-    "fn_cast_null_semantics",
-    "fn_complex_types",
-    "fn_conditional",
-    "fn_date_suite",
-    "fn_hash_encode",
-    "fn_math_suite",
-    "fn_regex_suite",
-    "fn_string_suite",
-    "inline_structs",
-    "parse_url_parts",
-    "posexplode_array",
-    "ptf_zscore_groups",
-    "sample_bucket",
-    "stack_rows",
-    "str_to_map_access",
-    "subq_exists_correlated",
-    "subq_in",
-    "subq_not_exists_correlated",
-    "subq_not_in",
-    "subq_scalar",
-    "transform_script",
-    "udaf_pandas_weighted_avg",
-    "udf_pandas_charge",
-    "udf_python_scalar",
-    "udtf_word_stream",
-    "union_all",
-    "union_distinct",
-    "view_over_view",
-    "acid_merge_upsert",
-    "acid_update_delete",
-    "agg_approx_distinct",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "corpus_clean",
-    "corpus_clean_v2",
-    "corpus_line_dedup",
-    "ddl_persistent_catalog",
-    "decontaminate_eval_overlap",
-)
-
-# ---- round-11 window (retired; kept for the rotation ledger).
-_ROUND11_WINDOW: tuple[str, ...] = (
-    # ---- round-11 window: ROTATED (verdict r10 next-round #1).
-    # Positions 0-7: the EIGHT rows-only -> synthesized-oracle
-    # upgrades staged in round 10 session 2 (dedup_simhash +
-    # ann_lsh_bucketed via the XXH64-in-SQL generator, BPE/WordPiece/
-    # unigram-LM merges+apply via unrolled-round trainer replays) —
-    # sampled now so the upgrades land as driver HASH evidence; their
-    # latest driver rows are r4/r6/r8 `no_oracle`, so under the
-    # amended rotation test (verdict r10 #2a: oracle-in-registry +
-    # no_oracle-latest-row counts as needs-sampling) they ARE the
-    # window's needs-sampling set. All eight were pre-verified in
-    # r10: compare_query green at sf0.001 AND sf0.01, driver_sim
-    # green at sf0.01.
-    # Positions 8-49: the evidence-freshness ratchet (verdict r10
-    # #5) — the stalest cumulative driver evidence, oldest first:
-    # ALL 41 queries whose latest row is r2-era (TPC-H q2/q4/q6/
-    # q8-q11/q13-q22, the join suite, the aggregate suite, the
-    # window suite — 8 rounds old, and the code under them has been
-    # touched since), then `orderby_limit` (oldest r3 row + r10
-    # bench watch item, verdict #6 — fresh driver evidence alongside
-    # the bench re-measure). After this window the max evidence age
-    # drops from r2 to r3 (40 r3-era rows remain — round 12's
-    # spares).
-    # Done criterion: CORRECTNESS_r11 = 8 upgrades flipping
-    # `no_oracle` -> hash_match true (rows-only set becomes exactly
-    # the 10 justified) + 42 stalest re-proves green.
+    "retrieval_rm3_expansion",
     "dedup_simhash",
-    "ann_lsh_bucketed",
-    "vocab_bpe_merges",
-    "vocab_bpe_apply",
-    "vocab_wordpiece_merges",
-    "vocab_wordpiece_apply",
-    "vocab_unigram_lm",
-    "vocab_unigram_apply",
-    # ---- freshness ratchet: the 41 r2-latest rows (TPC-H, joins,
-    # aggregates, windows), then the oldest r3 row.
-    "q2_min_cost_supplier",
-    "q4_priority_exists",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_cnt",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_pred",
-    "q20_potential_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales_opportunity",
-    "join_cross",
-    "join_full_outer",
-    "join_left_anti",
-    "join_left_outer",
-    "join_left_semi",
-    "join_null_safe",
-    "join_right_outer",
-    "join_theta_residual",
-    "join_unique_preserve",
-    "agg_collect",
-    "agg_distinct_multi",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_minmax_suite",
-    "agg_percentile",
-    "agg_rollup",
-    "agg_salted_skew",
-    "agg_stats_suite",
-    "win_first_last",
-    "win_lead_lag",
-    "win_moving_avg",
-    "win_ntile_cumedist",
-    "win_ranking",
-    "win_running_sum",
-    "orderby_limit",
+    "dedup_containment_prefix",
+    "decontaminate_bloom_prefilter",
+    # ---- all 29 remaining r6-era rows (stalest evidence).
+    "emb_kmeans_clusters",
+    "events_funnel",
+    "events_retention",
+    "events_top_transitions",
+    "events_windowed_rate",
+    "fmt_rcfile_round_trip",
+    "fmt_zorder_skipping",
+    "fn_date_format_patterns",
+    "fn_hash_multiarg",
+    "fn_json_path_suite",
+    "fn_sentences_soundex",
+    "fn_string_edge_cases",
+    "fn_trig_inverse",
+    "fn_xpath_suite",
+    "hiveql_case_cast_expr",
+    "hiveql_correlated_exists",
+    "hiveql_cte_chain",
+    "hiveql_having_alias",
+    "hiveql_null_ordering",
+    "hiveql_order_by_pos",
+    "hiveql_tablesample_bucket",
+    "hiveql_union_mixed",
+    "multimodal_phash_dedup",
+    "quality_learned_classifier",
+    "subq_not_in_null_semantics",
+    "text_compression_ratio",
+    "win_first_last_ignore_nulls",
+    "win_nth_value_ntile",
+    "win_range_interval_frame",
+    # ---- the 15 alphabetically-first r7-era rows fill the window.
+    "acid_delta_layout_reader",
+    "agg_bit_ops",
+    "agg_cms_heavy_hitters",
+    "agg_hll_set_ops",
+    "agg_min_by_max_by",
+    "agg_null_group_semantics",
+    "agg_quantile_sketch",
+    "ann_ivf_recall",
+    "ann_pq_recall",
+    "corpus_chunk_overlap",
+    "corpus_clean_v4",
+    "corpus_dsir_resample",
+    "corpus_interleave_stride",
+    "corpus_ngram_novelty",
+    "corpus_token_budget_sample",
 )
 
 

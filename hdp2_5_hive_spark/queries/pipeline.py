@@ -15,6 +15,7 @@ from ..operators import dedup as dd
 from ..operators import multimodal as mm
 from ..operators import similarity as sim
 from ..operators import textstats as ts
+from ..operators.util import materialize
 from .registry import register
 
 
@@ -188,9 +189,10 @@ def dedup_simhash(spark, t):
     band-value candidate join, UBIGINT xor/bit_count Hamming."""
     d = t.documents
     # The fingerprint table feeds both verify sides; without the
-    # persist the per-doc 64-bit fold ran twice per action (the
-    # bench's clearCache between queries bounds the entry).
-    fp = dd.simhash_fingerprints(d, "doc_id", "text").persist()
+    # persist the per-doc 64-bit fold ran twice per action.
+    fp = materialize(
+        dd.simhash_fingerprints(d, "doc_id", "text"), "dedup_simhash.fingerprints"
+    )
     cands = dd.lsh_candidate_pairs(d, "doc_id", "text")
     a = fp.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"))
     b = fp.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"))

@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 
 from .registry import register
 
-_last_v8_survivors = None
-
 # RE2 ∩ Java-regex portable PII patterns. Order of application:
 # email first (its local part may contain dots/digits that the IP
 # pattern could nibble), then IP (dots), then phone (dashes) — the
@@ -2848,6 +2846,7 @@ def corpus_clean_v8(spark, t):
 
     from ..operators.quality import kneser_ney_bits
     from ..operators.textstats import tfidf_topk
+    from ..operators.util import materialize
 
     docs = t.documents
     bits = kneser_ney_bits(
@@ -2864,16 +2863,15 @@ def corpus_clean_v8(spark, t):
             )
         ),
     )
-    global _last_v8_survivors
-    if _last_v8_survivors is not None:
-        _last_v8_survivors.unpersist()
     # the survivor set feeds the tfidf refit AND the final join —
-    # persist the branch point (the bm25 module-global pattern) or
-    # the whole KN-score + window subtree replays per branch
-    survivors = tiled.filter(F.col("tile") == 1).select(
-        "doc_id", "lang", "source", "text", "bits_per_bigram"
-    ).persist()
-    _last_v8_survivors = survivors
+    # persist the branch point or the whole KN-score + window subtree
+    # replays per branch
+    survivors = materialize(
+        tiled.filter(F.col("tile") == 1).select(
+            "doc_id", "lang", "source", "text", "bits_per_bigram"
+        ),
+        "corpus_clean_v8.survivors",
+    )
     kw = tfidf_topk(survivors, "doc_id", "text", k=1)
     return survivors.join(kw, "doc_id").select(
         "doc_id",

@@ -197,21 +197,44 @@ class TestPageRank:
         for k in a:
             assert abs(a[k] - b[k]) < 1e-9
 
-    def test_in_task_matches_distributed_loop(self, spark):
-        """The single-task kernel and the distributed loop must agree
+    # Null endpoints: the auto path must fall back to the distributed
+    # loop rather than feed None/NaN ids to the in-task kernel.
+    NULL_EDGES = [(1, 2), (2, 3), (3, 1), (None, 2), (1, None), (3, None)]
+
+    @pytest.mark.parametrize(
+        "edges,dtype",
+        [
+            (EDGES, "long"),
+            (NULL_EDGES, "long"),
+            (NULL_EDGES, "string"),
+        ],
+        ids=["plain-long", "null-long", "null-string"],
+    )
+    def test_in_task_matches_distributed_loop(self, spark, edges, dtype):
+        """The auto-selected path and the distributed loop must agree
         within the operator's documented reproducibility band (the
-        two differ only in per-node float64 summation order)."""
+        single-task kernel differs only in per-node float64 summation
+        order). Sorted (node, rank) lists, not dicts, so duplicate
+        None nodes cannot collapse."""
         from hdp2_5_hive_spark.operators.pagerank import pagerank
 
-        df = spark.createDataFrame(self.EDGES, "src long, dst long")
-        fast = {r.node: r.rank for r in pagerank(df, n_iter=15).collect()}
-        slow = {
-            r.node: r.rank
-            for r in pagerank(df, n_iter=15, _in_task=False).collect()
-        }
-        assert set(fast) == set(slow)
-        for k in fast:
-            assert abs(fast[k] - slow[k]) < 1e-12, (k, fast[k], slow[k])
+        cast = str if dtype == "string" else int
+        rows = [
+            tuple(None if x is None else cast(x) for x in e) for e in edges
+        ]
+        df = spark.createDataFrame(rows, f"src {dtype}, dst {dtype}")
+
+        def ranks(**kw):
+            out = pagerank(df, n_iter=15, **kw).collect()
+            return sorted(
+                ((r.node, r.rank) for r in out),
+                key=lambda t: (t[0] is None, str(t[0]), t[1]),
+            )
+
+        fast, slow = ranks(), ranks(_in_task=False)
+        assert [n for n, _ in fast] == [n for n, _ in slow]
+        for (k, a), (_, b) in zip(fast, slow):
+            assert abs(a - b) < 1e-12, (k, a, b)
 
 
 def test_components_star_restores_session_shuffle_partitions(spark):
