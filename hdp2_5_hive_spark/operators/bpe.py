@@ -39,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import util
 from .dedup import words_col
 
 _WORD_SCHEMA = StructType(
@@ -175,35 +176,16 @@ def train_bpe(
     text_col: str = "text",
     n_merges: int = 24,
     min_pair_count: int = 2,
-    *,
-    _in_task: bool | None = None,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns
     [(rank, left, right, pair_count)] — the merge table, highest
     frequency first; stops early when the best pair drops below
     ``min_pair_count``."""
-    spark = df.sparkSession
-    words = word_freq_table(df, text_col).persist()
-    n_words = words.count()  # materialize before the loop
-    # Right-size the loop's partitioning to the word table (guide §2):
-    # cached plans keep the static shuffle layout, so a small table
-    # would otherwise run every one of the 2·n_merges round jobs at
-    # spark.sql.shuffle.partitions near-empty tasks. One extra tiny
-    # job here re-materializes the table at data-proportional width;
-    # every later round (pair counts AND the rewrite checkpoint)
-    # inherits it. No-op at warehouse scale (coalesce never widens).
-    from .util import right_size_loop_frame
-
-    sized = right_size_loop_frame(words, n_words).localCheckpoint(eager=True)
-    words.unpersist()
-    words = sized
-    if n_words <= 65536 and _in_task is not False:
-        # One partition after the coalesce ⇒ run every merge round in
-        # the task (see _bpe_loop_kernel: bit-identical merge table).
-        # The explicit coalesce(1) is a no-op on the already-1-
-        # partition frame but makes the single-task invariant LOCAL
-        # instead of relying on the 65536 guard matching
-        # right_size_loop_frame's rows_per_partition (ADVICE r13).
+    words = word_freq_table(df, text_col).localCheckpoint(eager=True)
+    n_words, fits = util.task_sized(words, util.IN_TASK_MAX_WORDS)
+    if fits:
+        # Run every merge round in the task (see _bpe_loop_kernel:
+        # bit-identical merge table).
         rows = words.coalesce(1).mapInPandas(
             _bpe_loop_kernel(n_merges, min_pair_count),
             "rank int, left string, right string, cnt long",
@@ -212,6 +194,12 @@ def train_bpe(
             (int(r["rank"]), r["left"], r["right"], int(r["cnt"]))
             for r in sorted(rows, key=lambda r: r["rank"])
         ]
+    # Right-size the loop's partitioning to the word table (guide §2):
+    # checkpointed plans keep the static shuffle layout, so a small
+    # table would otherwise run every one of the 2·n_merges round jobs
+    # at spark.sql.shuffle.partitions near-empty tasks. Every later
+    # round (pair counts AND the rewrite checkpoint) inherits it.
+    words = util.right_size_loop_frame(words, n_words)
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
         # ONE job per round: the argmax collect below is the first

@@ -32,25 +32,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import util
+
 
 class ConvergenceError(RuntimeError):
     """Raised when label propagation hits max_iter before fixpoint."""
 
 
-def _cc_single_partition(sym: DataFrame) -> DataFrame:
+def _cc_single_partition(edges: DataFrame) -> DataFrame:
     """The WHOLE transitive closure in ONE task — exact fast path for
-    an edge list that fits one partition after right-sizing
-    (guide §1.2: fix the distributed algorithm first — here it
-    degenerates to sequential union-find and the per-round job
-    scheduling WAS the cost). Union-by-min-root makes every tree
-    root the smallest id seen in its component, so ``find`` at the
-    end returns exactly the hash-min fixpoint label (min reachable
-    id) — bit-identical to the iterative path for any input. At
-    warehouse scale the edge list spans many partitions and the
-    distributed loop below runs unchanged."""
+    a task-sized ``(a, b)`` edge list (guide §1.2: fix the
+    distributed algorithm first — here it degenerates to sequential
+    union-find and the per-round job scheduling WAS the cost).
+    Union-find ignores edge direction, so the list need not be
+    symmetric. Union-by-min-root makes every tree root the smallest
+    id seen in its component, so ``find`` at the end returns exactly
+    the hash-min fixpoint label (min reachable id) — bit-identical
+    to the iterative path for any null-free input. At warehouse scale
+    the edge list exceeds the bound and the distributed loops run
+    unchanged."""
     from pyspark.sql import types as T
 
-    node_t = sym.schema["a"].dataType
+    node_t = edges.schema["a"].dataType
     schema = T.StructType(
         [T.StructField("node", node_t), T.StructField("component", node_t)]
     )
@@ -84,7 +87,7 @@ def _cc_single_partition(sym: DataFrame) -> DataFrame:
             {"node": nodes, "component": [find(n) for n in nodes]}
         )
 
-    return sym.coalesce(1).mapInPandas(kernel, schema)
+    return edges.coalesce(1).mapInPandas(kernel, schema)
 
 
 def connected_components(
@@ -93,17 +96,16 @@ def connected_components(
     dst: str = "dst",
     *,
     max_iter: int = 20,
-    _in_task: bool | None = None,
 ) -> DataFrame:
     """Return ``(node, component)`` where ``component`` is the min
     node id reachable from ``node``. Nodes are those appearing in
     ``edges``; add isolated nodes by unioning self-loops upstream.
+    Edges with a null endpoint are ignored (as in ``k_core``), so no
+    null node appears in the output.
 
-    ``_in_task``: None (default) auto-selects the single-task
-    union-find when the edge list fits one right-sized partition;
-    False forces the distributed loop (tests pin its round guard).
-    Note: the in-task fast path computes the full closure directly,
-    so ``max_iter`` (and its ConvergenceError) only applies on the
+    A task-sized edge list (``util.task_sized``) is solved by the
+    single-task union-find, which computes the full closure directly:
+    ``max_iter`` (and its ConvergenceError) only applies on the
     distributed path — task-sized adversarial graphs succeed instead
     of failing loudly (ADVICE r13)."""
     # Symmetrize via ONE explode instead of union(e, e.reversed):
@@ -112,7 +114,7 @@ def connected_components(
     # bucket join + verify still executed twice inside the checkpoint
     # action (r14; the r13 checkpoint-before-count fix removed the
     # count's extra execution, not the union's).
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
     sym = (
         e.select(
             F.explode(
@@ -131,20 +133,14 @@ def connected_components(
     # LSH bucket-join + jaccard verify ran twice per query). The
     # count afterwards reads the checkpointed blocks.
     sym = sym.localCheckpoint(eager=True)  # edge list reused every round
-    n_edges = sym.count()
-    spark = edges.sparkSession
-    # Size the iteration's parallelism to the edge list: every round
-    # shuffles this frame, and running 32-task stages over a few
-    # hundred candidate pairs costs more in scheduling than in work.
-    # At scale the cap is the session's default parallelism.
-    target = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
-    if target == 1 and _in_task is not False:
-        # One partition holds every edge ⇒ solve the closure in-task
-        # (see _cc_single_partition: identical fixpoint labels).
+    n_edges, fits = util.task_sized(sym, util.IN_TASK_MAX_ROWS)
+    if fits:
+        # see _cc_single_partition: identical fixpoint labels
         return _cc_single_partition(sym)
     # Re-materialize at the right-sized layout so the per-round joins
     # read it directly (one extra tiny shuffle of checkpointed blocks,
     # never a recompute of the upstream pair generation).
+    target = util.loop_partitions(sym, n_edges)
     sym = sym.repartition(target, "b").localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("a").alias("node"))
@@ -190,14 +186,14 @@ def connected_components_star(
     dst: str = "dst",
     *,
     max_iter: int = 30,
-    _in_task: bool | None = None,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — same output contract as ``connected_components``
-    ((node, component=min reachable id)) but O(log n) rounds on ANY
-    graph, including the long chains where hash-min needs
-    O(diameter) rounds and trips its ConvergenceError.
+    ((node, component=min reachable id); edges with a null endpoint
+    are ignored) but O(log n) rounds on ANY graph, including the long
+    chains where hash-min needs O(diameter) rounds and trips its
+    ConvergenceError.
 
     Each round: large-star points every neighbor v > u at
     m = min(Γ(u) ∪ {u}); small-star points every neighbor v ≤ u (and
@@ -206,29 +202,19 @@ def connected_components_star(
     set contracts toward star graphs, so later rounds shrink. Labels
     localCheckpoint per round for the same lineage reasons as
     hash-min."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
     # Materialize BEFORE counting (same fix as connected_components:
     # counting the raw plan executed the upstream pair generation
     # twice — once for the count, once for the loop checkpoint).
     e = e.localCheckpoint(eager=True)
-    # Right-size round parallelism to the edge list, like hash-min:
-    # every round runs ~6 keyed stages over this frame, and 32-task
-    # stages over a few hundred pairs cost more in scheduling than
-    # work. At scale the cap is the session default.
     spark = edges.sparkSession
-    n_edges = e.count()
-    _target = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
-    if _target == 1 and _in_task is not False:
-        # One partition holds every edge ⇒ solve in-task. Large/small
-        # star and hash-min share the same fixpoint contract —
-        # (node, min reachable id) — and _cc_single_partition computes
-        # exactly that, so the label set is identical.
-        sym = e.union(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct()
-        return _cc_single_partition(sym)
+    n_edges, fits = util.task_sized(e, util.IN_TASK_MAX_ROWS)
+    if fits:
+        # Star and hash-min share the fixpoint contract — (node, min
+        # reachable id) — and union-find needs no symmetric edges.
+        return _cc_single_partition(e)
+    # Right-size round parallelism to the edge list, like hash-min.
+    _target = util.loop_partitions(e, n_edges)
     # Capture the EFFECTIVE value (no default arg): with a None
     # default, RuntimeConfig.get returns None when the key was never
     # explicitly set — the finally block would then skip the restore
@@ -426,8 +412,6 @@ def k_core(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 60,
-    *,
-    _in_task: bool | None = None,
 ) -> DataFrame:
     """The k-core: the maximal subgraph where every node keeps
     degree ≥ k — computed by the standard iterative peel (remove ALL
@@ -446,10 +430,12 @@ def k_core(
     partial core.
 
     Returns (node, core_deg): the k-core members with their degree
-    INSIDE the core (≥ k by definition). Like connected_components,
-    the in-task fast path computes the full peel directly, so
-    ``max_iter``/ConvergenceError only applies on the distributed
-    path (ADVICE r13).
+    INSIDE the core (≥ k by definition). Edges with a null endpoint
+    are ignored: ``least``/``greatest`` skip the null, and the
+    ``a != b`` filter drops the self-loop or null pair left behind.
+    Like connected_components, the in-task fast path computes the
+    full peel directly, so ``max_iter``/ConvergenceError only applies
+    on the distributed path (ADVICE r13).
     """
     a, b = F.col(a_col), F.col(b_col)
     und = (
@@ -476,12 +462,8 @@ def k_core(
         .select("_e.src", "_e.dst")
         .localCheckpoint(eager=True)
     )
-    # Gate count reads the just-checkpointed blocks (one cheap job,
-    # never a recompute of the upstream pair generation). At
-    # warehouse scale this is one extra bounded job per invocation —
-    # kept because the fast-path decision needs the exact size
-    # (verdict r13 #4: documented trade, not an oversight).
-    if cur.count() <= 262_144 and _in_task is not False:
+    _, fits = util.task_sized(cur, util.IN_TASK_MAX_ROWS)
+    if fits:
         # The directed edge list is task-sized ⇒ run the whole peel
         # in ONE task (the union-find/trainer in-task discipline):
         # degrees are exact integers and removal is a set operation,

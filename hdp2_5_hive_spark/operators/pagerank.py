@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import util
+
 
 def _pagerank_single_partition(
     e: DataFrame, n_iter: int, damping: float
@@ -98,16 +100,12 @@ def pagerank(
     *,
     n_iter: int = 15,
     damping: float = 0.85,
-    _in_task: bool | None = None,
 ) -> DataFrame:
     """(node, rank) for every node appearing in ``edges`` (either
     side). Duplicate edges are collapsed (link graphs count a link
-    once); self-loops participate normally.
-
-    ``_in_task``: None (default) auto-selects the single-task kernel
-    when the deduplicated edge list is task-sized and has no null
-    endpoint; False forces the distributed loop (tests pin parity
-    between the two).
+    once); self-loops participate normally. A task-sized edge list
+    with no null endpoint (``util.task_sized``) runs the single-task
+    kernel; any other takes the distributed loop.
 
     Retention: the edge list, node table and every round's ranks are
     local checkpoints (on the distributed path the edge list is
@@ -128,21 +126,10 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # One job over the checkpointed blocks returns the size AND null
-    # presence: the in-task kernel must not see a null endpoint —
-    # Arrow turns a null in a LongType column into NaN (a node of its
-    # own per edge) and sorted() raises on mixed None/str ids. Null
-    # endpoints take the distributed loop, which tolerates them.
-    sizes = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("u").alias("nu"),
-        F.count("v").alias("nv"),
-    ).collect()[0]
-    n_edges = int(sizes["n"])
+    n_edges, fits = util.task_sized(e, util.IN_TASK_MAX_ROWS, ("u", "v"))
     if n_edges == 0:
         raise ValueError("pagerank: empty edge list (no nodes)")
-    no_nulls = sizes["nu"] == n_edges and sizes["nv"] == n_edges
-    if n_edges <= 262_144 and no_nulls and _in_task is not False:
+    if fits:
         # The deduplicated edge list is task-sized ⇒ run the whole
         # power iteration in ONE task (the k_core/union-find in-task
         # discipline). Measured on the 40-host bench graph: the
@@ -163,9 +150,7 @@ def pagerank(
     # per-round stages over a small graph otherwise schedule
     # shuffle.partitions near-empty tasks. At scale `target` is the
     # session default and this is a no-op.
-    target = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
+    target = util.loop_partitions(e, n_edges)
     e = e.repartition(target, "u").localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("u").alias("node"))

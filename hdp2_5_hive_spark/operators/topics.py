@@ -49,6 +49,8 @@ from decimal import Decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import util
+
 
 def doc_word_counts(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -264,7 +266,6 @@ def train_topics(
     k: int = 4,
     vocab_size: int = 128,
     n_rounds: int = 8,
-    _in_task: bool | None = None,
 ) -> tuple[DataFrame, dict]:
     """Hard-EM mixture-of-unigrams. Returns (assignment DataFrame
     (doc_id, topic), model dict with 'counts' {(topic,word): n},
@@ -273,32 +274,14 @@ def train_topics(
     spark = df.sparkSession
     dw = doc_word_counts(df, text_col, id_col)
     vocab = top_vocab(dw, vocab_size)
-    base = dw.join(
+    dw = dw.join(
         F.broadcast(spark.createDataFrame([(w,) for w in vocab], "word string")),
         "word",
-    ).persist()
-    # One aggregate returns size AND null-id presence (same single
-    # job a bare count() was): the in-task kernel must not see null
-    # doc_ids — Arrow coerces a null in a LongType column to float64
-    # (str(5.0) mis-hashes vs the SQL cast) and sorted() raises on
-    # mixed None/str keys (ADVICE r13). Null ids take the
-    # distributed path, which tolerates them.
-    _sizes = base.agg(
-        F.count(F.lit(1)).alias("n"), F.count("doc_id").alias("nn")
-    ).collect()[0]
-    n_dw, _n_nonnull_ids = int(_sizes["n"]), int(_sizes["nn"])
-    # Right-size the frames every EM round re-scans (guide §2):
-    # cached plans keep the static shuffle layout, so a small corpus
-    # would otherwise run each round's M-step join + E-step aggregate
-    # + changed-count at shuffle.partitions near-empty tasks. All
-    # round aggregates are integer/decimal-exact, so the layout
-    # cannot change any value.
-    from .util import right_size_loop_frame
-
-    dw = right_size_loop_frame(base, n_dw).localCheckpoint(eager=True)
-    base.unpersist()
-
-    if n_dw <= 262_144 and n_dw == _n_nonnull_ids and _in_task is not False:
+    ).localCheckpoint(eager=True)
+    # Null doc_ids take the distributed path (see util.task_sized;
+    # a NaN id would also mis-hash vs the SQL cast in str(5.0)).
+    n_dw, fits = util.task_sized(dw, util.IN_TASK_MAX_ROWS, ("doc_id",))
+    if fits:
         # The doc-word table is task-sized ⇒ run every EM round in ONE
         # task (see _train_local_topics: decimal-exact, bit-identical)
         # instead of ~4 scheduled jobs per round. Driver state stays
@@ -372,9 +355,16 @@ def train_topics(
         }
         return assign_df, model
 
+    # Right-size the frames every EM round re-scans (guide §2):
+    # checkpointed plans keep the static shuffle layout, so a small
+    # corpus would otherwise run each round's M-step join + E-step
+    # aggregate + changed-count at shuffle.partitions near-empty
+    # tasks. All round aggregates are integer/decimal-exact, so the
+    # layout cannot change any value.
+    dw = util.right_size_loop_frame(dw, n_dw)
     n_docs = dw.select("doc_id").distinct().count()
     assign = (
-        right_size_loop_frame(
+        util.right_size_loop_frame(
             dw.select("doc_id").distinct().select(
                 "doc_id", _init_topic_col(k).alias("topic")
             ),

@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import util
 from .bpe import word_freq_table
 
 __all__ = [
@@ -279,7 +280,6 @@ def train_unigram_lm(
     n_rounds: int = 3,
     max_piece_len: int = 6,
     shrink: float = 0.75,
-    _in_task: bool | None = None,
 ) -> list[tuple[str, int, float]]:
     """Learn a unigram-LM piece vocabulary. Each round: Viterbi
     E-step → count-based M-step → prune to ``shrink`` of the current
@@ -288,18 +288,11 @@ def train_unigram_lm(
 
     Returns [(piece, count, logprob)] sorted (count desc, piece asc),
     truncated to ``vocab_size`` with single chars retained."""
-    base = word_freq_table(df, text_col).persist()
-    n_words = base.count()
-    # Right-size the loop frame (guide §2, same rationale as
-    # bpe.train_bpe): every E-step re-scans this table, and cached
-    # plans keep the static shuffle layout regardless of size.
-    from .util import right_size_loop_frame
-
-    words = right_size_loop_frame(base, n_words).localCheckpoint(eager=True)
-    base.unpersist()
-    if n_words <= 65536 and _in_task is not False:
-        # One partition after the coalesce ⇒ run seed + every EM
-        # round in the task (see _train_local: bit-identical vocab).
+    words = word_freq_table(df, text_col).localCheckpoint(eager=True)
+    n_words, fits = util.task_sized(words, util.IN_TASK_MAX_WORDS)
+    if fits:
+        # Run seed + every EM round in the task (see _train_local:
+        # bit-identical vocab).
         kw = dict(
             vocab_size=vocab_size,
             seed_size=seed_size,
@@ -323,8 +316,6 @@ def train_unigram_lm(
                 }
             )
 
-        # Explicit coalesce(1): no-op on a 1-partition frame, makes
-        # the single-task invariant local (ADVICE r13).
         rows = words.coalesce(1).mapInPandas(
             kernel, "rank int, piece string, cnt long, logp double"
         ).collect()
@@ -332,6 +323,11 @@ def train_unigram_lm(
             (r["piece"], int(r["cnt"]), float(r["logp"]))
             for r in sorted(rows, key=lambda r: r["rank"])
         ]
+    # Right-size the loop frame (guide §2, same rationale as
+    # bpe.train_bpe): every E-step re-scans this table, and
+    # checkpointed plans keep the static shuffle layout regardless of
+    # size.
+    words = util.right_size_loop_frame(words, n_words)
     seed = seed_pieces(
         words, max_piece_len=max_piece_len, seed_size=seed_size
     )

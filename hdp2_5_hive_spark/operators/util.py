@@ -92,6 +92,49 @@ def ensure_parallelism(
     return df
 
 
+IN_TASK_MAX_ROWS = 262_144  # edges / doc-word rows (pagerank, cc, k_core, topics)
+# Subword trainers rescan every word in every round, so their bound is lower.
+IN_TASK_MAX_WORDS = 65_536
+
+
+def task_sized(
+    df: DataFrame, max_rows: int, key_cols: tuple[str, ...] = ()
+) -> tuple[int, bool]:
+    """``(n_rows, fits)`` for an iterative operator's loop input:
+    ``fits`` says the single-task kernel
+    (``df.coalesce(1).mapInPandas(kernel, schema)``) may take ``df``
+    instead of the distributed Spark loop. ONE job
+    (``count(*)`` plus ``count(k)`` per key column) over a frame the
+    caller has already materialized with ``localCheckpoint(eager=True)``,
+    so the upstream plan never runs twice.
+
+    ``fits`` needs ``n_rows <= max_rows`` and no null in any of
+    ``key_cols``. Null keys take the distributed loop, which tolerates
+    them: Arrow turns a null in a long column into float64 NaN — ids
+    above 2^53 lose precision and NaN never equals itself, so a
+    dict-keyed kernel splits or loops on it — and ``sorted()`` raises
+    on ``None`` among strings. With no nulls, long ids stay int64.
+    Pass ``key_cols`` only where a null can reach the kernel.
+    """
+    from pyspark.sql import functions as F
+
+    row = df.agg(
+        F.count(F.lit(1)), *[F.count(k) for k in key_cols]
+    ).collect()[0]
+    n = int(row[0])
+    return n, n <= max_rows and all(c == n for c in row[1:])
+
+
+def loop_partitions(df: DataFrame, n_rows: int) -> int:
+    """Shuffle width for a distributed graph loop over ``n_rows``
+    edges: one partition per 50,000 edges, capped at the session's
+    default parallelism. Every round shuffles the edge list, and
+    full-width stages over a few hundred edges cost more in
+    scheduling than in work."""
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(cap, n_rows // 50_000 + 1))
+
+
 def right_size_loop_frame(
     df: DataFrame, n_rows: int, *, rows_per_partition: int = 65536
 ) -> DataFrame:

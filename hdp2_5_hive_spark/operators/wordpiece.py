@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import util
 from .dedup import words_col
 
 UNK = "[UNK]"
@@ -232,29 +233,18 @@ def train_wordpiece(
     min_pair_count: int = 2,
     *,
     _words: DataFrame | None = None,
-    _in_task: bool | None = None,
 ) -> list[tuple[int, str, str, str, int, float]]:
     """Learn ``n_merges`` WordPiece merges. Returns
     [(rank, left, right, merged, pair_count, score)] in merge order.
     Stops early when the best pair's support drops below
     ``min_pair_count``."""
-    base = (
+    words = (
         _words if _words is not None else wp_word_table(df, text_col)
-    ).persist()
-    n_words = base.count()
-    # Right-size the loop frame + one-job rounds via lazy checkpoints
-    # — same scheme and rationale as bpe.train_bpe (cached plans keep
-    # the static shuffle layout; the eager re-materialization job per
-    # round is folded into the next round's argmax job).
-    from .util import right_size_loop_frame
-
-    words = right_size_loop_frame(base, n_words).localCheckpoint(eager=True)
-    base.unpersist()
-    if n_words <= 65536 and _in_task is not False:
-        # One partition after the coalesce ⇒ run every merge round in
-        # the task (see _wp_loop_kernel: bit-identical merge table).
-        # Explicit coalesce(1): no-op on a 1-partition frame, makes
-        # the single-task invariant local (ADVICE r13).
+    ).localCheckpoint(eager=True)
+    n_words, fits = util.task_sized(words, util.IN_TASK_MAX_WORDS)
+    if fits:
+        # Run every merge round in the task (see _wp_loop_kernel:
+        # bit-identical merge table).
         rows = words.coalesce(1).mapInPandas(
             _wp_loop_kernel(n_merges, min_pair_count),
             "rank int, left string, right string, cnt long, score double",
@@ -270,6 +260,9 @@ def train_wordpiece(
             )
             for r in sorted(rows, key=lambda r: r["rank"])
         ]
+    # Right-size the loop frame + one-job rounds via lazy checkpoints
+    # — same scheme and rationale as bpe.train_bpe.
+    words = util.right_size_loop_frame(words, n_words)
     merges: list[tuple[int, str, str, str, int, float]] = []
     for rank in range(n_merges):
         top = (

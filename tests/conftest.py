@@ -26,3 +26,15 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_con():
     return connect_oracle(SF_DIR)
+
+
+@pytest.fixture
+def distributed_only(monkeypatch):
+    """Route every iterative operator (pagerank, connected components,
+    k_core, topics and the subword trainers) to its distributed Spark
+    loop: no input fits a bound of -1 rows, so ``util.task_sized``
+    never admits the single-task kernel."""
+    from hdp2_5_hive_spark.operators import util
+
+    monkeypatch.setattr(util, "IN_TASK_MAX_ROWS", -1)
+    monkeypatch.setattr(util, "IN_TASK_MAX_WORDS", -1)

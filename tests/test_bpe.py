@@ -57,6 +57,12 @@ def test_bpe_matches_reference_on_corpus(spark, sf_dir):
     assert got == want
 
 
+def test_bpe_distributed_loop_matches_reference_on_corpus(
+    spark, sf_dir, distributed_only
+):
+    test_bpe_matches_reference_on_corpus(spark, sf_dir)
+
+
 def test_bpe_greedy_overlap_semantics(spark):
     """'aaa' under merge (a,a) becomes ['aa','a'] — left-to-right
     greedy, no overlapping merge."""

@@ -39,34 +39,53 @@ def test_direction_irrelevant(spark):
     assert got == {(1, 1), (3, 1), (4, 1), (5, 1)}
 
 
-def test_convergence_guard_raises(spark):
-    # _in_task=False pins the DISTRIBUTED loop: the auto-selected
-    # single-task union-find solves any small graph outright and
-    # never needs the round guard.
+def test_convergence_guard_raises(spark, distributed_only):
+    # The single-task union-find solves any small graph outright and
+    # never needs the round guard, so the fixture pins the loop.
     edges = [(i, i + 1) for i in range(30)]
     with pytest.raises(cc.ConvergenceError):
         cc.connected_components(
             spark.createDataFrame(edges, "src long, dst long"),
             max_iter=3,
-            _in_task=False,
         )
 
 
-def test_in_task_fastpath_matches_distributed(spark):
-    """The single-task union-find fast path and the distributed
-    hash-min loop must label identically (both = min reachable id)."""
-    edges = [(7, 3), (3, 9), (20, 21), (1, 1), (9, 40), (41, 40)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    fast = {(r.node, r.component) for r in cc.connected_components(df).collect()}
-    dist = {
-        (r.node, r.component)
-        for r in cc.connected_components(df, _in_task=False).collect()
-    }
-    star = {
-        (r.node, r.component)
-        for r in cc.connected_components_star(df, _in_task=False).collect()
-    }
-    assert fast == dist == star and fast
+# (None, 2) and (6, None) must be ignored on every path: a NaN id
+# makes union-find's find() loop forever (NaN != NaN), None among
+# strings breaks sorted(), and the two distributed loops would label
+# a null node differently.
+NULL_CC_EDGES = [(1, 2), (2, 3), (5, 6), (None, 2), (6, None)]
+
+
+@pytest.mark.parametrize(
+    "edges,dtype",
+    [
+        ([(7, 3), (3, 9), (20, 21), (1, 1), (9, 40), (41, 40)], "long"),
+        (NULL_CC_EDGES, "long"),
+        (NULL_CC_EDGES, "string"),
+    ],
+    ids=["plain-long", "null-long", "null-string"],
+)
+def test_single_task_fastpath_matches_distributed(
+    spark, request, edges, dtype
+):
+    """The single-task union-find fast path, the distributed hash-min
+    loop and both star paths must label identically (min reachable
+    id), with no null node."""
+    cast = str if dtype == "string" else int
+    rows = [tuple(None if x is None else cast(x) for x in e) for e in edges]
+    df = spark.createDataFrame(rows, f"src {dtype}, dst {dtype}")
+
+    def labels(op):
+        return {(r.node, r.component) for r in op(df).collect()}
+
+    auto = labels(cc.connected_components)
+    auto_star = labels(cc.connected_components_star)
+    request.getfixturevalue("distributed_only")
+    dist = labels(cc.connected_components)
+    dist_star = labels(cc.connected_components_star)
+    assert auto == dist == auto_star == dist_star and auto
+    assert all(n is not None and c is not None for n, c in auto)
 
 
 def test_keep_list_marks_min_per_cluster(spark):
@@ -120,7 +139,9 @@ def test_star_equals_hashmin_on_clustered_graph(spark):
     assert a == b and a
 
 
-def test_star_converges_on_long_chain_where_hashmin_cannot(spark):
+def test_star_converges_on_long_chain_where_hashmin_cannot(
+    spark, distributed_only
+):
     """A 400-edge path graph has diameter 400: hash-min at its
     default 20-round budget must raise ConvergenceError, while the
     star variant converges in O(log n) rounds and labels every node
@@ -136,11 +157,11 @@ def test_star_converges_on_long_chain_where_hashmin_cannot(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(400)], "src long, dst long"
     )
-    # _in_task=False pins the distributed loops (the auto fast path
+    # The fixture pins the distributed loops (the auto fast path
     # would solve the chain in one task on either variant).
     with _pytest.raises(ConvergenceError):
-        connected_components(chain, _in_task=False)
-    labels = connected_components_star(chain, _in_task=False).collect()
+        connected_components(chain)
+    labels = connected_components_star(chain).collect()
     assert len(labels) == 401
     assert all(r.component == 0 for r in labels)
 
@@ -210,7 +231,9 @@ class TestPageRank:
         ],
         ids=["plain-long", "null-long", "null-string"],
     )
-    def test_in_task_matches_distributed_loop(self, spark, edges, dtype):
+    def test_single_task_matches_distributed_loop(
+        self, spark, request, edges, dtype
+    ):
         """The auto-selected path and the distributed loop must agree
         within the operator's documented reproducibility band (the
         single-task kernel differs only in per-node float64 summation
@@ -224,20 +247,24 @@ class TestPageRank:
         ]
         df = spark.createDataFrame(rows, f"src {dtype}, dst {dtype}")
 
-        def ranks(**kw):
-            out = pagerank(df, n_iter=15, **kw).collect()
+        def ranks():
+            out = pagerank(df, n_iter=15).collect()
             return sorted(
                 ((r.node, r.rank) for r in out),
                 key=lambda t: (t[0] is None, str(t[0]), t[1]),
             )
 
-        fast, slow = ranks(), ranks(_in_task=False)
+        fast = ranks()
+        request.getfixturevalue("distributed_only")
+        slow = ranks()
         assert [n for n, _ in fast] == [n for n, _ in slow]
         for (k, a), (_, b) in zip(fast, slow):
             assert abs(a - b) < 1e-12, (k, a, b)
 
 
-def test_components_star_restores_session_shuffle_partitions(spark):
+def test_components_star_restores_session_shuffle_partitions(
+    spark, distributed_only
+):
     """Regression: the operator temporarily drops
     spark.sql.shuffle.partitions to its edge-count target and must
     restore the session's EFFECTIVE value afterwards — including in

@@ -205,6 +205,12 @@ def test_kcore_matches_reference_on_corpus_graph(spark, sf_dir):
         assert got == _reference_kcore(edges, k)
 
 
+def test_kcore_distributed_loop_matches_reference_on_corpus_graph(
+    spark, sf_dir, distributed_only
+):
+    test_kcore_matches_reference_on_corpus_graph(spark, sf_dir)
+
+
 def test_containment_prefix_planted_pairs_and_plan(spark, sf_dir):
     from hdp2_5_hive_spark.operators.dedup import containment_pairs
 

@@ -95,6 +95,12 @@ def test_corpus_fit_pinned_exactly(spark, sf_dir):
     assert len({t for t in got.values()}) > 1
 
 
+def test_corpus_fit_distributed_loop_pinned_exactly(
+    spark, sf_dir, distributed_only
+):
+    test_corpus_fit_pinned_exactly(spark, sf_dir)
+
+
 def test_zero_invocab_docs_excluded(spark):
     docs = [(0, "alpha beta alpha"), (1, "beta gamma"), (2, "")]
     df = spark.createDataFrame(docs, "doc_id long, text string")

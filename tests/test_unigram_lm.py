@@ -144,6 +144,12 @@ def test_unigram_lm_matches_sequential_reference_exactly(spark):
         assert abs(a - b) < 1e-12
 
 
+def test_unigram_lm_distributed_loop_matches_sequential_reference(
+    spark, distributed_only
+):
+    test_unigram_lm_matches_sequential_reference_exactly(spark)
+
+
 def test_unigram_apply_segments_and_covers(spark):
     """Viterbi decode: segmentation concatenates back to the word
     stream (lossless), and discovered morphemes actually appear as

@@ -68,6 +68,12 @@ def test_wordpiece_matches_reference_on_corpus(spark, sf_dir):
     assert got == want
 
 
+def test_wordpiece_distributed_loop_matches_reference_on_corpus(
+    spark, sf_dir, distributed_only
+):
+    test_wordpiece_matches_reference_on_corpus(spark, sf_dir)
+
+
 def test_wordpiece_score_beats_raw_count(spark):
     """The discriminating case vs BPE: (a,##b) occurs 10 times but
     both symbols are frequent (score 10/(10*10)); (x,##y) occurs 5
