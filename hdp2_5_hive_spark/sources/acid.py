@@ -424,6 +424,17 @@ def write_acid_events(
     return path
 
 
+def _event_files(dirs) -> list[str]:
+    """The ORC event files under the base_/delta_ directories
+    ``dirs``: every ``*.orc`` or ``part-*`` file, sorted, each once
+    (Spark's ``part-*.orc`` names match both patterns)."""
+    import glob as _glob
+
+    return sorted(
+        {f for d in dirs for f in _glob.glob(f"{d}/*.orc") + _glob.glob(f"{d}/part-*")}
+    )
+
+
 def read_acid_table(
     spark: SparkSession,
     table_dir: str,
@@ -507,10 +518,7 @@ def read_acid_table(
     # directory NAMES (native Hive-ACID detection) and refuses them;
     # enumerating the ORC part files sidesteps that while reading
     # the identical bytes.
-    files = sorted(
-        f for d in dirs for f in _glob.glob(f"{d}/*.orc") + _glob.glob(f"{d}/part-*")
-    )
-    events = spark.read.format("orc").load(sorted(set(files)))
+    events = spark.read.format("orc").load(_event_files(dirs))
     if as_of_write_id is not None:
         events = events.filter(
             F.col("currentTransaction") <= as_of_write_id
@@ -608,14 +616,7 @@ def compact_acid_table(
                 _shutil.rmtree(d, ignore_errors=True)
         return current
 
-    files = sorted(
-        set(
-            f
-            for d in live
-            for f in _glob.glob(f"{d}/*.orc") + _glob.glob(f"{d}/part-*")
-        )
-    )
-    events = spark.read.format("orc").load(files)
+    events = spark.read.format("orc").load(_event_files(live))
     w = W.partitionBy("originalTransaction", "bucket", "rowId").orderBy(
         F.desc("currentTransaction"), F.desc("operation")
     )
@@ -688,14 +689,7 @@ def compact_acid_minor(
         return live[0][2]
     lo = min(l for l, _, _ in live)
     hi = max(h for _, h, _ in live)
-    files = sorted(
-        set(
-            f
-            for _, _, d in live
-            for f in _glob.glob(f"{d}/*.orc") + _glob.glob(f"{d}/part-*")
-        )
-    )
-    events = spark.read.format("orc").load(files)
+    events = spark.read.format("orc").load(_event_files(d for _, _, d in live))
     new_delta = f"{table_dir}/delta_{lo:07d}_{hi:07d}"
     if any(d == new_delta for _, _, d in live):
         # only possible with OVERLAPPING delta ranges (one live delta
@@ -741,21 +735,31 @@ def compaction_needed(
 ) -> dict:
     """The Initiator's decision (reference
     ``ql/txn/compactor/Initiator.java`` — checkForCompaction):
-    MAJOR when delta bytes exceed ``delta_pct_threshold`` of base
-    bytes (hive.compactor.delta.pct.threshold, default 0.1), MINOR
-    when the delta-directory COUNT exceeds ``delta_threshold``
+    MAJOR when delta size reaches ``delta_pct_threshold`` of base
+    size (hive.compactor.delta.pct.threshold, default 0.1), MINOR
+    when the delta-directory COUNT reaches ``delta_threshold``
     (hive.compactor.delta.num.threshold, default 10). Returns
-    {"type": "MAJOR"|"MINOR"|None, ...metrics} — pure filesystem
-    inspection, no data read."""
-    import glob as _glob
-    import os as _os
+    {"type": "MAJOR"|"MINOR"|None, "n_deltas", "base_rows",
+    "delta_rows"}.
 
-    def _bytes(d):
-        return sum(
-            _os.path.getsize(f)
-            for f in _glob.glob(f"{d}/*")
-            if _os.path.isfile(f)
-        )
+    Size is counted in ROWS, read from the ORC file footers
+    (``pyarrow.orc.ORCFile.nrows``) — only footers are opened, no
+    data is read. On-disk bytes would not do: at small sizes they
+    are mostly per-file ORC overhead (footer, metadata, stripe
+    index), so the same rows written as 1 file or as 32 files (the
+    writer's partition count, which follows the core count) would
+    get different decisions. Each event is one full row, so the row
+    ratio is the share of the table's events held in deltas — what
+    Hive's byte ratio approximates once files are large.
+
+    A base with zero rows makes any delta that holds rows MAJOR;
+    deltas with no rows are never MAJOR."""
+    import glob as _glob
+
+    from pyarrow import orc as _orc
+
+    def _rows(dirs):
+        return sum(_orc.ORCFile(f).nrows for f in _event_files(dirs))
 
     bases, deltas = [], []
     for d in sorted(_glob.glob(f"{table_dir}/*")):
@@ -764,19 +768,19 @@ def compaction_needed(
             bases.append(d)
         elif name.startswith("delta_"):
             deltas.append(d)
-    base_bytes = sum(_bytes(d) for d in bases)
-    delta_bytes = sum(_bytes(d) for d in deltas)
+    base_rows = _rows(bases)
+    delta_rows = _rows(deltas)
     n_deltas = len(deltas)
     ctype = None
-    if bases and base_bytes > 0 and delta_bytes / base_bytes >= delta_pct_threshold:
+    if bases and delta_rows > 0 and delta_rows >= delta_pct_threshold * base_rows:
         ctype = "MAJOR"
     elif n_deltas >= delta_threshold:
         ctype = "MINOR"
     return {
         "type": ctype,
         "n_deltas": n_deltas,
-        "base_bytes": base_bytes,
-        "delta_bytes": delta_bytes,
+        "base_rows": base_rows,
+        "delta_rows": delta_rows,
     }
 
 

@@ -478,7 +478,7 @@ def test_time_travel_row_filter_on_spanning_minor_delta(spark, tmp_path):
 
 
 def test_initiator_policy_and_auto_compact(spark, tmp_path):
-    """Initiator.java analogue: MAJOR when delta bytes cross the
+    """Initiator.java analogue: MAJOR when delta rows cross the
     pct-of-base threshold, MINOR when the delta COUNT crosses the
     num threshold, nothing when healthy — and auto_compact actually
     runs the chosen compaction with contents preserved."""
@@ -500,7 +500,7 @@ def test_initiator_policy_and_auto_compact(spark, tmp_path):
     ac.write_acid_events(upd, d, kind="delta", write_id=2, operation=ac.OP_UPDATE)
     assert ac.compaction_needed(d, delta_threshold=10)["type"] is None
 
-    # many small deltas: MINOR by count (keep bytes below the pct bar)
+    # many small deltas: MINOR by count (keep rows below the pct bar)
     for wid in range(3, 14):
         u2 = rows.filter("k = 1").withColumn("v", F.lit(f"u{wid}"))
         ac.write_acid_events(u2, d, kind="delta", write_id=wid, operation=ac.OP_UPDATE)
@@ -513,7 +513,7 @@ def test_initiator_policy_and_auto_compact(spark, tmp_path):
     names = sorted(p.rsplit("/", 1)[-1] for p in glob.glob(f"{d}/delta_*"))
     assert names == ["delta_0000002_0000013"], names
 
-    # pile on bytes: MAJOR by pct threshold
+    # pile on rows: MAJOR by pct threshold
     big = rows.withColumn("v", F.lit("B"))
     ac.write_acid_events(big, d, kind="delta", write_id=14, operation=ac.OP_UPDATE)
     dec2 = ac.compaction_needed(d, delta_threshold=100, delta_pct_threshold=0.1)
@@ -521,6 +521,50 @@ def test_initiator_policy_and_auto_compact(spark, tmp_path):
     assert ac.auto_compact(spark, d, delta_threshold=100, delta_pct_threshold=0.1) == "MAJOR"
     final = {(r.k, r.v) for r in ac.read_acid_table(spark, d).collect()}
     assert final == {(i, "B") for i in range(100)}
+
+
+def test_initiator_decision_ignores_file_layout(spark, tmp_path):
+    """The same 100 base rows written as 1 file or as 32 files, each
+    with the same 1-row delta, get the same decision and the same
+    row counts: the pct threshold compares ORC footer row counts,
+    not on-disk bytes, which per-file ORC overhead dominates."""
+    import glob
+
+    from hdp2_5_hive_spark.sources import acid as ac
+
+    rows = spark.createDataFrame(
+        [(1, 0, i, i, f"v{i}") for i in range(100)],
+        "originalTransaction long, bucket int, rowId long, k long, v string",
+    )
+    upd = rows.filter("k = 0").withColumn("v", F.lit("u")).coalesce(1)
+    decisions = []
+    for n_files in (1, 32):
+        d = str(tmp_path / f"tbl{n_files}")
+        base = ac.write_acid_events(rows.repartition(n_files), d, kind="base", write_id=1)
+        assert len(glob.glob(f"{base}/part-*")) == n_files
+        ac.write_acid_events(upd, d, kind="delta", write_id=2, operation=ac.OP_UPDATE)
+        decisions.append(ac.compaction_needed(d))
+    one, many = decisions
+    expected = {"type": None, "n_deltas": 1, "base_rows": 100, "delta_rows": 1}
+    assert one == many == expected, decisions
+
+
+def test_initiator_empty_base(spark, tmp_path):
+    """A base with zero rows makes any delta holding rows MAJOR;
+    with no delta rows there is nothing to fold."""
+    from hdp2_5_hive_spark.sources import acid as ac
+
+    d = str(tmp_path / "tbl")
+    rows = spark.createDataFrame(
+        [(1, 0, 0, 0, "v0")],
+        "originalTransaction long, bucket int, rowId long, k long, v string",
+    )
+    ac.write_acid_events(rows.limit(0), d, kind="base", write_id=1)
+    empty = ac.compaction_needed(d)
+    assert empty["type"] is None and empty["base_rows"] == 0, empty
+    ac.write_acid_events(rows, d, kind="delta", write_id=2)
+    dec = ac.compaction_needed(d)
+    assert dec["type"] == "MAJOR" and dec["delta_rows"] == 1, dec
 
 
 def test_row_id_virtual_column_exposed(spark, tmp_path):
