@@ -89,33 +89,38 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def _merge_kernel(left: str, right: str):
-    """Arrow-batched rewrite: replace adjacent (left,right) with the
-    concatenation, left-to-right greedy (standard BPE application —
-    'aaa' with merge (a,a) → ['aa','a'])."""
+def merge_pair(
+    syms: list[str], left: str, right: str, merged: str
+) -> list[str]:
+    """Replace each adjacent (left, right) in ``syms`` with ``merged``,
+    left-to-right greedy (standard BPE application — 'aaa' with merge
+    (a,a) → ['aa','a'])."""
+    out: list[str] = []
+    i, n = 0, len(syms)
+    while i < n:
+        if i + 1 < n and syms[i] == left and syms[i + 1] == right:
+            out.append(merged)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def merge_words(
+    words: DataFrame, left: str, right: str, merged: str
+) -> DataFrame:
+    """One distributed merge round: ``merge_pair`` over every symbol
+    array of a (syms, freq) word table, Arrow-batched."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for syms in pdf["syms"]:
-                s = list(syms)
-                merged = []
-                i = 0
-                while i < len(s):
-                    if (
-                        i + 1 < len(s)
-                        and s[i] == left
-                        and s[i + 1] == right
-                    ):
-                        merged.append(left + right)
-                        i += 2
-                    else:
-                        merged.append(s[i])
-                        i += 1
-                out.append(merged)
+            out = [
+                merge_pair(list(s), left, right, merged) for s in pdf["syms"]
+            ]
             yield pd.DataFrame({"syms": out, "freq": pdf["freq"]})
 
-    return kernel
+    return words.mapInPandas(kernel, _WORD_SCHEMA)
 
 
 def _bpe_loop_kernel(n_merges: int, min_pair_count: int):
@@ -151,19 +156,10 @@ def _bpe_loop_kernel(n_merges: int, min_pair_count: int):
             lefts.append(left)
             rights.append(right)
             counts.append(cnt)
-            merged = left + right
-            for w in range(len(words)):
-                syms, freq = words[w]
-                i, out = 0, []
-                n = len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == left and syms[i + 1] == right:
-                        out.append(merged)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                words[w] = (out, freq)
+            words = [
+                (merge_pair(syms, left, right, left + right), freq)
+                for syms, freq in words
+            ]
         yield pd.DataFrame(
             {"rank": ranks, "left": lefts, "right": rights, "cnt": counts}
         )
@@ -227,8 +223,8 @@ def train_bpe(
             int(top[0]["pair_count"]),
         )
         merges.append((rank, left, right, cnt))
-        words = words.mapInPandas(
-            _merge_kernel(left, right), _WORD_SCHEMA
+        words = merge_words(
+            words, left, right, left + right
         ).localCheckpoint(eager=False)
     return merges
 
@@ -284,19 +280,7 @@ def apply_bpe(
                 return cache[w]
             syms = list(w)
             for left, right in ranked:
-                i, out = 0, []
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == left
-                        and syms[i + 1] == right
-                    ):
-                        out.append(left + right)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
+                syms = merge_pair(syms, left, right, left + right)
             cache[w] = syms
             return syms
 

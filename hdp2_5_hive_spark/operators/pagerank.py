@@ -103,9 +103,12 @@ def pagerank(
 ) -> DataFrame:
     """(node, rank) for every node appearing in ``edges`` (either
     side). Duplicate edges are collapsed (link graphs count a link
-    once); self-loops participate normally. A task-sized edge list
-    with no null endpoint (``util.task_sized``) runs the single-task
-    kernel; any other takes the distributed loop.
+    once); self-loops participate normally. Edges with a null
+    endpoint are ignored (as in ``connected_components`` and
+    ``k_core``): a null key never matches in the per-round joins, so
+    such an edge would leak rank mass, and no null node appears in
+    the output. A task-sized edge list (``util.task_sized``) runs the
+    single-task kernel; a larger one takes the distributed loop.
 
     Retention: the edge list, node table and every round's ranks are
     local checkpoints (on the distributed path the edge list is
@@ -123,10 +126,11 @@ def pagerank(
     # loop right-sized, ~1s — guide §2.4, remove repeated shuffles).
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .dropna()
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n_edges, fits = util.task_sized(e, util.IN_TASK_MAX_ROWS, ("u", "v"))
+    n_edges, fits = util.task_sized(e, util.IN_TASK_MAX_ROWS)
     if n_edges == 0:
         raise ValueError("pagerank: empty edge list (no nodes)")
     if fits:

@@ -43,7 +43,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     LongType,
     StringType,
     StructField,
@@ -51,16 +50,10 @@ from pyspark.sql.types import (
 )
 
 from . import util
+from .bpe import merge_pair, merge_words
 from .dedup import words_col
 
 UNK = "[UNK]"
-
-_WORD_SCHEMA = StructType(
-    [
-        StructField("syms", ArrayType(StringType())),
-        StructField("freq", LongType()),
-    ]
-)
 
 
 def _strip_cont(sym: str) -> str:
@@ -129,32 +122,6 @@ def _pair_and_sym_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def _merge_kernel(left: str, right: str):
-    merged = left + _strip_cont(right)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for syms in pdf["syms"]:
-                syms = list(syms)
-                i, row = 0, []
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == left
-                        and syms[i + 1] == right
-                    ):
-                        row.append(merged)
-                        i += 2
-                    else:
-                        row.append(syms[i])
-                        i += 1
-                out.append(row)
-            yield pd.DataFrame({"syms": out, "freq": pdf["freq"]})
-
-    return kernel
-
-
 def _wp_loop_kernel(n_merges: int, min_pair_count: int):
     """The WHOLE merge loop inside one task — exact fast path for a
     word table that fits one partition after right-sizing (the
@@ -201,18 +168,10 @@ def _wp_loop_kernel(n_merges: int, min_pair_count: int):
             counts.append(cnt)
             scores.append(score)
             merged = left + _strip_cont(right)
-            for w in range(len(words)):
-                syms, freq = words[w]
-                i, out = 0, []
-                n = len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == left and syms[i + 1] == right:
-                        out.append(merged)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                words[w] = (out, freq)
+            words = [
+                (merge_pair(syms, left, right, merged), freq)
+                for syms, freq in words
+            ]
         yield pd.DataFrame(
             {
                 "rank": ranks,
@@ -288,8 +247,8 @@ def train_wordpiece(
                 float(r["score"]),
             )
         )
-        words = words.mapInPandas(
-            _merge_kernel(r["left"], r["right"]), _WORD_SCHEMA
+        words = merge_words(
+            words, r["left"], r["right"], merged
         ).localCheckpoint(eager=False)
     return merges
 

@@ -7,8 +7,11 @@ oracle-checked (SURVEY.md §5).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Container, Mapping, Sequence
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,21 +86,109 @@ def register(
     return deco
 
 
-def all_queries() -> dict[str, Query]:
-    """Every registered query, ordered for the driver's sample window.
+# The driver checks this many names from the front of all_queries().
+WINDOW_SIZE = 50
 
-    The driver's correctness run checks a prefix (~50) of this dict,
-    so ``SAMPLE_FRONT`` (the per-round rotation ledger in
-    ``queries/__init__``) comes first, then the rest in module
-    registration order. A front name that doesn't exist is a bug —
-    fail loudly rather than silently shrinking the window."""
-    from . import SAMPLE_FRONT, load_all
+# Optimizations that touch semantics and must be proven by the
+# driver's own oracle run: each leads the window until the newest
+# CORRECTNESS artifact records it, then ranks like any other name.
+MUST_PROVE: tuple[str, ...] = (
+    "graph_pagerank_hosts",
+    "dedup_jaccard_prefix",
+    "retrieval_rm3_expansion",
+    "dedup_simhash",
+    "dedup_containment_prefix",
+    "decontaminate_bloom_prefilter",
+)
+
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+
+
+def load_artifacts(root: Path) -> list[dict[str, dict]]:
+    """The driver's ``CORRECTNESS_r<N>.json`` records under ``root``
+    (query name -> result row), oldest round first. Rounds sort by
+    number, so r10 follows r9. An unreadable file is skipped: a bad
+    record must not stop the driver from loading the registry."""
+    rounds = []
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        try:
+            rounds.append((int(m.group(1)), json.loads(path.read_text())))
+        except (OSError, ValueError):
+            continue
+    return [rows for _, rows in sorted(rounds, key=lambda r: r[0])]
+
+
+def _green(row: Mapping) -> bool:
+    # A rows-only query's executed-green record is err == "no_oracle"
+    # with its row count.
+    if row.get("err") == "no_oracle":
+        return row.get("spark_rows") is not None
+    return not row.get("err") and not any(
+        v is False for k, v in row.items() if k.endswith("_match")
+    )
+
+
+def sample_window(
+    names: Sequence[str],
+    artifacts: Sequence[Mapping[str, Mapping]],
+    has_oracle: Container[str],
+    must_prove: Sequence[str],
+) -> list[str]:
+    """The ``WINDOW_SIZE`` names the driver should check next, from
+    the registered ``names`` (registration order) and its
+    ``artifacts`` (oldest round first):
+
+    1. ``must_prove`` names the newest artifact does not hold;
+    2. names that need sampling, in registration order: never
+       sampled, latest row red (``err`` set or a ``*_match`` false),
+       or latest row rows-only while the query now has an oracle;
+    3. the rest, stalest evidence first (round of the latest row,
+       then name).
+
+    With no artifacts every name is unsampled, so the order is
+    ``must_prove`` then registration order."""
+    latest: dict[str, tuple[int, Mapping]] = {}
+    for rnd, rows in enumerate(artifacts):
+        for name, row in rows.items():
+            latest[name] = (rnd, row)
+    newest = artifacts[-1] if artifacts else {}
+
+    def needs_sampling(name: str) -> bool:
+        if name not in latest:
+            return True
+        row = latest[name][1]
+        return not _green(row) or (
+            row.get("err") == "no_oracle" and name in has_oracle
+        )
+
+    order = [n for n in must_prove if n not in newest]
+    order += [n for n in names if needs_sampling(n)]
+    order += sorted(
+        (n for n in names if n in latest), key=lambda n: (latest[n][0], n)
+    )
+    return list(dict.fromkeys(order))[:WINDOW_SIZE]
+
+
+def all_queries() -> dict[str, Query]:
+    """Every registered query, ordered for the driver's sample window:
+    ``sample_window`` over the repo's CORRECTNESS artifacts first,
+    then the rest in module registration order. A ``MUST_PROVE`` name
+    that is not registered is a bug — fail loudly rather than
+    silently shrinking the window."""
+    from . import load_all
 
     load_all()
-    missing = [n for n in SAMPLE_FRONT if n not in _REGISTRY]
+    missing = [n for n in MUST_PROVE if n not in _REGISTRY]
     if missing:
-        raise KeyError(f"SAMPLE_FRONT names not registered: {missing}")
-    ordered = {n: _REGISTRY[n] for n in SAMPLE_FRONT}
+        raise KeyError(f"MUST_PROVE names not registered: {missing}")
+    has_oracle = {n for n, q in _REGISTRY.items() if q.oracle}
+    window = sample_window(
+        list(_REGISTRY), load_artifacts(_REPO_ROOT), has_oracle, MUST_PROVE
+    )
+    ordered = {n: _REGISTRY[n] for n in window}
     ordered.update((n, q) for n, q in _REGISTRY.items() if n not in ordered)
     return ordered
 

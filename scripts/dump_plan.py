@@ -1,4 +1,5 @@
-"""Dump .explain("formatted") for queries into plans/r14/<name>_<tag>.txt.
+"""Dump .explain("formatted") for queries into
+.bench_build/plans/<name>_<tag>.txt (git-ignored).
 
 Usage: python scripts/dump_plan.py <tag> name [name ...]
 """
@@ -19,7 +20,7 @@ SF = "/root/testdata/sf0.1"
 def main() -> int:
     tag = sys.argv[1]
     names = sys.argv[2:]
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r14"
+    out_dir = Path(__file__).resolve().parent.parent / ".bench_build" / "plans"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_session(app_name="dump-plan")
     qs = all_queries()

@@ -218,8 +218,9 @@ class TestPageRank:
         for k in a:
             assert abs(a[k] - b[k]) < 1e-9
 
-    # Null endpoints: the auto path must fall back to the distributed
-    # loop rather than feed None/NaN ids to the in-task kernel.
+    # Null endpoints: both paths must ignore the null-endpoint edges
+    # rather than feed None/NaN ids to the in-task kernel or leak rank
+    # mass through joins on a null key.
     NULL_EDGES = [(1, 2), (2, 3), (3, 1), (None, 2), (1, None), (3, None)]
 
     @pytest.mark.parametrize(
@@ -260,6 +261,9 @@ class TestPageRank:
         assert [n for n, _ in fast] == [n for n, _ in slow]
         for (k, a), (_, b) in zip(fast, slow):
             assert abs(a - b) < 1e-12, (k, a, b)
+        for path in (fast, slow):
+            assert None not in [n for n, _ in path]
+            assert abs(sum(r for _, r in path) - 1.0) < 1e-9
 
 
 def test_components_star_restores_session_shuffle_partitions(

@@ -63,111 +63,168 @@ def test_view_registration_follows_sf_dir(spark):
 
 
 def test_sample_front_names_unique_and_registered():
-    """SAMPLE_FRONT is the driver's correctness window: a duplicate
+    """MUST_PROVE leads the driver's correctness window: a duplicate
     name silently shrinks the window (dict collapse), a missing name
     raises in all_queries() — pin both."""
-    from hdp2_5_hive_spark.queries import SAMPLE_FRONT
+    from hdp2_5_hive_spark.queries.registry import MUST_PROVE
 
-    assert len(set(SAMPLE_FRONT)) == len(SAMPLE_FRONT)
-    assert set(SAMPLE_FRONT) <= set(QUERIES)
+    assert len(set(MUST_PROVE)) == len(MUST_PROVE)
+    assert set(MUST_PROVE) <= set(QUERIES)
 
 
-def test_sample_front_window_is_rotated():
-    """Rotation forcing function (r7 verdict: a stale front re-proves
-    50 already-green rows and stalls the ledger). The driver samples a
-    ~50-name prefix of SAMPLE_FRONT, so that prefix must contain NO
-    query that already has a cumulative CORRECTNESS_r*.json row.
-    This test going red at the start of a round means the driver just
-    recorded the previous window — rotate SAMPLE_FRONT (front the
-    remaining never-sampled names, or the round's fixed red rows)
-    as the FIRST commit of the round, exactly like the rotation
-    ledger in queries/__init__.py describes.
+# The window the driver was to check after recording CORRECTNESS_r01
+# .. r14, built by hand before the window was computed: MUST_PROVE,
+# the 29 names last proven in r6, then the 15 alphabetically-first
+# names last proven in r7.
+R15_WINDOW = [
+    "graph_pagerank_hosts", "dedup_jaccard_prefix",
+    "retrieval_rm3_expansion", "dedup_simhash",
+    "dedup_containment_prefix", "decontaminate_bloom_prefilter",
+    "emb_kmeans_clusters", "events_funnel", "events_retention",
+    "events_top_transitions", "events_windowed_rate",
+    "fmt_rcfile_round_trip", "fmt_zorder_skipping",
+    "fn_date_format_patterns", "fn_hash_multiarg", "fn_json_path_suite",
+    "fn_sentences_soundex", "fn_string_edge_cases", "fn_trig_inverse",
+    "fn_xpath_suite", "hiveql_case_cast_expr", "hiveql_correlated_exists",
+    "hiveql_cte_chain", "hiveql_having_alias", "hiveql_null_ordering",
+    "hiveql_order_by_pos", "hiveql_tablesample_bucket",
+    "hiveql_union_mixed", "multimodal_phash_dedup",
+    "quality_learned_classifier", "subq_not_in_null_semantics",
+    "text_compression_ratio", "win_first_last_ignore_nulls",
+    "win_nth_value_ntile", "win_range_interval_frame",
+    "acid_delta_layout_reader", "agg_bit_ops", "agg_cms_heavy_hitters",
+    "agg_hll_set_ops", "agg_min_by_max_by", "agg_null_group_semantics",
+    "agg_quantile_sketch", "ann_ivf_recall", "ann_pq_recall",
+    "corpus_chunk_overlap", "corpus_clean_v4", "corpus_dsir_resample",
+    "corpus_interleave_stride", "corpus_ngram_novelty",
+    "corpus_token_budget_sample",
+]
 
-    Exemption (r8 verdict #2): a name whose LATEST cumulative row is
-    red (err, or any *_match false) MUST be re-sampled to prove the
-    fix, so red-latest names are allowed — required, even — in the
-    front window.
+GREEN = {
+    "rows_match": True, "schema_match": True, "hash_match": True,
+    "spark_rows": 1, "oracle_rows": 1, "err": None,
+}
 
-    Exemption (r9 verdict #1): when fewer never-sampled/red names
-    remain than window slots, the spare slots should deliberately
-    RE-PROVE the oldest-evidence green rows — so green names are
-    allowed at positions >= the window's count of names that NEED
-    sampling (never-sampled, red-latest, or oracle-upgraded).
 
-    Amendments (r10 verdict #2):
-    (a) a name whose registry entry HAS an oracle but whose latest
-        driver row is ``no_oracle`` NEEDS sampling — a staged
-        rows-only -> oracle upgrade isn't evidence until the driver
-        records the hash row;
-    (b) when nothing in the registry needs sampling, the window must
-        still ROTATE: any name that appears in the MOST RECENT
-        CORRECTNESS artifact goes red — the next round's starting
-        gun, forcing the evidence-freshness ratchet (r10 verdict #5:
-        spare slots go to the stalest-evidence rows, oldest first,
-        never a repeat of the window just recorded)."""
-    import glob
-    import json
-    import os
+def _driver_order(monkeypatch, artifacts):
+    """``list(all_queries())`` as if the repo held ``artifacts``."""
+    from hdp2_5_hive_spark.queries import registry
 
-    from hdp2_5_hive_spark.queries import SAMPLE_FRONT, oracle_map
+    monkeypatch.setattr(registry, "load_artifacts", lambda root: artifacts)
+    return list(registry.all_queries())
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, dict] = {}
-    newest_artifact: dict[str, dict] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            newest_artifact = json.loads(open(path).read())
-        except (OSError, ValueError):
-            continue
-        latest.update(newest_artifact)
-    if not latest:
-        return  # fresh clone without driver artifacts
 
-    has_oracle = set(oracle_map())
+def _committed_r01_r14():
+    from hdp2_5_hive_spark.queries.registry import _REPO_ROOT, load_artifacts
 
-    def _green(row: dict) -> bool:
-        # rows-only contract: err == "no_oracle" with rows returned is
-        # the driver's executed-green record shape (emb_pca_project r7)
-        if row.get("err") == "no_oracle":
-            return row.get("spark_rows") is not None
-        if row.get("err"):
-            return False
-        return all(
-            row.get(k) is not False
-            for k in ("rows_match", "schema_match", "hash_match")
-        )
+    artifacts = load_artifacts(_REPO_ROOT)
+    assert len(artifacts) >= 14
+    return artifacts[:14]
 
-    def _needs_sampling(name: str) -> bool:
-        row = latest.get(name)
-        if row is None or not _green(row):
-            return True
-        # (a) staged oracle upgrade: registry now has an oracle, but
-        # the latest driver evidence predates it (rows-only record)
-        return row.get("err") == "no_oracle" and name in has_oracle
 
-    window = SAMPLE_FRONT[:50]
-    needs_sampling = sum(1 for n in window if _needs_sampling(n))
-    if needs_sampling == 0:
-        # (b) all-green steady state: the starting gun. The window
-        # must not repeat any name the driver just recorded — rotate
-        # to the stalest-evidence rows instead.
-        stale = [n for n in window if n in newest_artifact]
-        assert not stale, (
-            f"nothing in the SAMPLE_FRONT window needs sampling, yet "
-            f"{len(stale)} of its names were just recorded in the "
-            f"newest CORRECTNESS artifact (first: {stale[:5]}) — "
-            "rotate the window to the stalest-evidence rows before "
-            "doing anything else this round"
-        )
-        return
-    stale = [
-        n
-        for i, n in enumerate(window)
-        if i < needs_sampling and not _needs_sampling(n)
+def test_sample_window_reproduces_r15_window_and_order(monkeypatch):
+    """On the committed r01-r14 artifacts the computed window is the
+    hand-built r15 window, and everything behind it stays in module
+    registration order (= the no-artifact order minus the window)."""
+    order = _driver_order(monkeypatch, _committed_r01_r14())
+    no_artifacts = _driver_order(monkeypatch, [])
+    assert len(order) == len(QUERIES)
+    assert order[:50] == R15_WINDOW
+    assert order[50:] == [n for n in no_artifacts if n not in R15_WINDOW]
+
+
+def test_sample_window_rotates_after_driver_records_it(monkeypatch):
+    """Once the driver records an all-green window, the next window
+    shares no name with it: the just-proven rows are the freshest."""
+    artifacts = _committed_r01_r14()
+    window = _driver_order(monkeypatch, artifacts)[:50]
+    r15 = {n: dict(GREEN) for n in window}
+    following = _driver_order(monkeypatch, artifacts + [r15])[:50]
+    assert len(following) == 50
+    assert not set(following) & set(window)
+
+
+def _window(names, artifacts, has_oracle=(), must_prove=()):
+    from hdp2_5_hive_spark.queries.registry import sample_window
+
+    return sample_window(names, artifacts, set(has_oracle), must_prove)
+
+
+def test_sample_window_no_artifacts_is_must_prove_then_registration():
+    assert _window(["c", "a", "b", "d"], [], must_prove=("b",)) == [
+        "b", "c", "a", "d",
     ]
-    assert not stale, (
-        f"SAMPLE_FRONT window holds {len(stale)} already-green "
-        f"queries ahead of the re-prove boundary (position "
-        f"{needs_sampling}; first stale: {stale[:5]}) — rotate the "
-        "front before doing anything else this round"
-    )
+
+
+def test_sample_window_never_sampled_first():
+    arts = [{"a": GREEN, "b": GREEN, "d": GREEN}]
+    assert _window(["a", "b", "c", "d"], arts) == ["c", "a", "b", "d"]
+
+
+def test_sample_window_red_latest_first():
+    arts = [
+        {"a": GREEN, "b": GREEN, "c": GREEN, "d": GREEN, "e": GREEN},
+        {
+            "b": {**GREEN, "hash_match": False},
+            "d": {**GREEN, "err": "Py4JJavaError"},
+            "e": GREEN,
+        },
+        {"a": GREEN},
+    ]
+    # b and d are red in their latest row; e's and a's are green.
+    assert _window(["a", "b", "c", "d", "e"], arts) == [
+        "b", "d", "c", "e", "a",
+    ]
+    # A later green row clears the red one.
+    arts.append({"b": GREEN})
+    assert _window(["a", "b", "c", "d", "e"], arts)[:2] == ["d", "c"]
+
+
+def test_sample_window_oracle_upgrade_first():
+    rows_only = {"err": "no_oracle", "spark_rows": 7}
+    arts = [{"a": GREEN, "b": rows_only, "c": rows_only}]
+    # b gained an oracle since its rows-only row; c still has none,
+    # so its rows-only row is green evidence.
+    assert _window(["a", "b", "c"], arts, has_oracle={"a", "b"}) == [
+        "b", "a", "c",
+    ]
+    # A rows-only row that did not execute is red.
+    arts.append({"c": {"err": "no_oracle", "spark_rows": None}})
+    assert _window(["a", "b", "c"], arts, has_oracle={"a", "b"}) == [
+        "b", "c", "a",
+    ]
+
+
+def test_sample_window_fill_stalest_first():
+    arts = [{"d": GREEN, "c": GREEN}, {"b": GREEN, "a": GREEN}, {"e": GREEN}]
+    assert _window(["e", "b", "a", "d", "c"], arts) == [
+        "c", "d", "a", "b", "e",
+    ]
+    names = [f"q{i:03d}" for i in range(60)]
+    arts = [{n: GREEN for n in names[30:]}, {n: GREEN for n in names[:30]}]
+    assert _window(names, arts) == names[30:] + names[:20]
+
+
+def test_sample_window_must_prove_drops_out_once_recorded():
+    arts = [{"a": GREEN, "b": GREEN, "c": GREEN}, {"a": GREEN}]
+    assert _window(["a", "b", "c"], arts, must_prove=("c",)) == [
+        "c", "b", "a",
+    ]
+    arts.append({"c": GREEN})
+    assert _window(["a", "b", "c"], arts, must_prove=("c",)) == [
+        "b", "a", "c",
+    ]
+
+
+def test_load_artifacts_orders_rounds_numerically(tmp_path):
+    from hdp2_5_hive_spark.queries.registry import load_artifacts
+
+    for rnd in (10, 2, 1):
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(
+            '{"r%d": {}}' % rnd
+        )
+    (tmp_path / "CORRECTNESS_r3.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_r4_draft.json").write_text('{"x": {}}')
+    assert [list(a) for a in load_artifacts(tmp_path)] == [
+        ["r1"], ["r2"], ["r10"],
+    ]

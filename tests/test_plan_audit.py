@@ -1100,7 +1100,8 @@ def test_shuffle_census_pinned(spark, sf_dir):
     # r13 optimization: the under-split guard hash-repartitions on the
     # group key so the HAVING aggregate reuses that one exchange —
     # the round-robin Exchange + the aggregate's own Exchange fused
-    # into one shuffle (4 exchanges -> 2; see plans/r13/q18_*).
+    # into one shuffle (4 exchanges -> 2; see
+    # `git show b992b97:plans/r13/q18_large_orders_after.txt`).
     assert (q18["n_exchanges"], q18["n_broadcast_joins"], q18["n_sortmerge_joins"]) == (2, 4, 0)
     assert q18["has_pushed_filters"]
     cube = rows["agg_cube_grouping_id"]
