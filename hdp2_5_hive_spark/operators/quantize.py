@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import cosine_col
+from .similarity import cosine_from_norms, norm_col
 
 
 def quantize_int8_stats(
@@ -67,7 +67,13 @@ def quantize_int8_stats(
             ),
             8,
         ).alias("max_abs_err"),
-        F.round(cosine_col(F.col("_v"), F.col("_dq")), 8).alias("cos_dequant"),
+        F.round(
+            cosine_from_norms(
+                F.col("_v"), F.col("_dq"),
+                norm_col(F.col("_v")), norm_col(F.col("_dq")),
+            ),
+            8,
+        ).alias("cos_dequant"),
     )
 
 

@@ -16,7 +16,11 @@ Two paths:
 
 Determinism: dot/norm sums are sequential left folds over the array
 (arrays live whole inside one row), so results are bit-identical to
-the DuckDB oracle at any parallelism.
+the DuckDB oracle at any parallelism. Each vector's norm is folded
+once, as a column (``with_norm``), before any pair join; a pair then
+folds only its dot product (``cosine_from_norms``). The norm column
+is the same fold over the same array, so it is the same double the
+per-pair fold gave.
 """
 
 from __future__ import annotations
@@ -44,8 +48,17 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(_dsum_arr(sq))
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
+def with_norm(df: DataFrame, vec_col: str, out: str) -> DataFrame:
+    """``df`` plus its vectors' norms as column ``out``: fold each
+    norm once per vector, not once per pair it joins into."""
+    return df.withColumn(out, norm_col(F.col(vec_col)))
+
+
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms ``na`` and ``nb``
+    (from ``with_norm`` or ``norm_col``). A zero norm gives NULL
+    (non-ANSI division by 0.0)."""
+    return dot_col(a, b) / (na * nb)
 
 
 def cosine_topk(
@@ -64,19 +77,31 @@ def cosine_topk(
     """
     from .util import ensure_parallelism
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    q = with_norm(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        ),
+        "q_vec",
+        "q_norm",
     )
-    # Per-pair fold math is the CPU cost — split the big side wide.
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    # Norms are folded once per vector above; the per-pair dot-product
+    # fold is the CPU cost — split the big side wide.
+    c = with_norm(
+        ensure_parallelism(corpus).select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        ),
+        "c_vec",
+        "c_norm",
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            cosine_col(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
+            cosine_from_norms(
+                F.col("q_vec"), F.col("c_vec"),
+                F.col("q_norm"), F.col("c_norm"),
+            ).alias("cosine"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -233,23 +258,33 @@ def lsh_bucket_topk(
     from .util import ensure_parallelism, materialize
 
     salted = materialize(
-        _salted_buckets(
-            ensure_parallelism(df),
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            n_planes=n_planes,
-            max_bucket_rows=max_bucket_rows,
-            n_tables=n_tables,
+        with_norm(
+            _salted_buckets(
+                ensure_parallelism(df),
+                id_col=id_col,
+                vec_col=vec_col,
+                dim=dim,
+                n_planes=n_planes,
+                max_bucket_rows=max_bucket_rows,
+                n_tables=n_tables,
+            ),
+            "_vec",
+            "_norm",
         ),
         "similarity.lsh_salted",
     )
     keys = ["_table", "_bucket", "_salt"]
     a = salted.select(
-        F.col("_id").alias("query_id"), F.col("_vec").alias("q_vec"), *keys
+        F.col("_id").alias("query_id"),
+        F.col("_vec").alias("q_vec"),
+        F.col("_norm").alias("q_norm"),
+        *keys,
     )
     b = salted.select(
-        F.col("_id").alias("neighbor_id"), F.col("_vec").alias("c_vec"), *keys
+        F.col("_id").alias("neighbor_id"),
+        F.col("_vec").alias("c_vec"),
+        F.col("_norm").alias("c_norm"),
+        *keys,
     )
     scored = (
         a.join(b, keys)
@@ -257,7 +292,10 @@ def lsh_bucket_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_col(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
+            cosine_from_norms(
+                F.col("q_vec"), F.col("c_vec"),
+                F.col("q_norm"), F.col("c_norm"),
+            ).alias("cosine"),
         )
     )
     if n_tables > 1:
@@ -368,17 +406,23 @@ def ivf_topk(
         order = np.argsort(-(X @ C.T), axis=1)[:, :n_probe].astype("int32")
         return pd.Series(list(order))
 
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
+    base = with_norm(
+        ensure_parallelism(df).select(
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
+        ),
+        "_vec",
+        "_norm",
     )
     corpus = base.select(
         F.col("_id").alias("neighbor_id"),
         F.col("_vec").alias("c_vec"),
+        F.col("_norm").alias("c_norm"),
         nearest_cell("_vec").alias("_cell"),
     )
     queries = base.select(
         F.col("_id").alias("query_id"),
         F.col("_vec").alias("q_vec"),
+        F.col("_norm").alias("q_norm"),
         F.explode(probe_cells("_vec")).alias("_cell"),
     )
     scored = (
@@ -387,7 +431,10 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_col(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
+            cosine_from_norms(
+                F.col("q_vec"), F.col("c_vec"),
+                F.col("q_norm"), F.col("c_norm"),
+            ).alias("cosine"),
         )
         # a (query, neighbor) pair can surface from several probed
         # cells — dedup before ranking
@@ -439,9 +486,13 @@ def semantic_dedup_pairs(
     # kmeans_train's bounded actions plus the within-cluster
     # sequential-fold cosine — the assignment rescan is noise, so a
     # persist would occupy executor memory without paying for itself.
-    vecs = df.select(
-        F.col(id_col).cast("string").alias("_id"),
-        F.col(vec_col).alias("_vec"),
+    vecs = with_norm(
+        df.select(
+            F.col(id_col).cast("string").alias("_id"),
+            F.col(vec_col).alias("_vec"),
+        ),
+        "_vec",
+        "_norm",
     ).join(assign, "_id")
     sizes = vecs.groupBy("cluster").agg(F.count(F.lit(1)).alias("_csize"))
     n_salts = F.greatest(
@@ -450,15 +501,22 @@ def semantic_dedup_pairs(
     salted = vecs.join(F.broadcast(sizes), "cluster").select(
         "_id",
         "_vec",
+        "_norm",
         "cluster",
         F.pmod(F.xxhash64("_id"), n_salts).cast("int").alias("_salt"),
     )
     keys = ["cluster", "_salt"]
     a = salted.select(
-        F.col("_id").alias("id_a"), F.col("_vec").alias("va"), *keys
+        F.col("_id").alias("id_a"),
+        F.col("_vec").alias("va"),
+        F.col("_norm").alias("na"),
+        *keys,
     )
     b = salted.select(
-        F.col("_id").alias("id_b"), F.col("_vec").alias("vb"), *keys
+        F.col("_id").alias("id_b"),
+        F.col("_vec").alias("vb"),
+        F.col("_norm").alias("nb"),
+        *keys,
     )
     return (
         a.join(b, keys)
@@ -466,7 +524,9 @@ def semantic_dedup_pairs(
         .select(
             "id_a",
             "id_b",
-            cosine_col(F.col("va"), F.col("vb")).alias("cosine"),
+            cosine_from_norms(
+                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
+            ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

@@ -527,17 +527,37 @@ def dedup_embedding_cosine(spark, t):
     this is a correctness fixture only — quadratic by construction,
     it validates the LSH-bucketed scale path. ``ann_lsh_bucketed``
     (operators/similarity.py) is the production path at 100 TB.
-    Sequential left-fold math keeps it bit-identical to DuckDB."""
+    Sequential left-fold math keeps it bit-identical to DuckDB.
+
+    Each norm is folded once per vector before the join, so a pair
+    folds only its dot product. The 500-row slice is one parquet
+    split, so the streamed (left) side of the nested-loop join is
+    re-split across the cores; left as one split it runs the whole
+    quadratic in one task."""
     from ..operators import similarity as s
+    from ..operators.util import ensure_parallelism
 
     v = t.embeddings.filter(F.col("vec_id") < 500).select("vec_id", "embedding")
-    a = v.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
-    b = v.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    cos = s.cosine_col(F.col("ea"), F.col("eb"))
-    return pairs.select(
-        "id_a", "id_b", F.round(cos, 6).alias("cosine")
-    ).filter(cos >= 0.35)
+    v = s.with_norm(v, "embedding", "norm")
+    a = ensure_parallelism(v).select(
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("ea"),
+        F.col("norm").alias("na"),
+    )
+    b = v.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("eb"),
+        F.col("norm").alias("nb"),
+    )
+    cos = s.cosine_from_norms(
+        F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
+    )
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= 0.35)
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    )
 
 
 @register(
@@ -565,20 +585,26 @@ WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
 def dedup_ngram_jaccard(spark, t):
     """Exact bigram-shingle Jaccard over all pairs (doc_id < 200
     slice): the no-LSH baseline for near-dedup — quadratic by
-    construction, used to validate the MinHash path's recall."""
+    construction, used to validate the MinHash path's recall. The
+    slice is one parquet split, so the streamed (left) side of the
+    nested-loop join is re-split across the cores."""
     from ..operators import dedup as d
+    from ..operators.util import ensure_parallelism
 
     docs = t.documents.filter(F.col("doc_id") < 200)
     sh = docs.select(
         F.col("doc_id"), d.shingles_col(F.col("text"), 2).alias("s")
     )
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
+    a = ensure_parallelism(sh).select(
+        F.col("doc_id").alias("id_a"), F.col("s").alias("sa")
+    )
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
     jac = d.jaccard_col(F.col("sa"), F.col("sb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .filter(jac >= 0.2)
+        .select("id_a", "id_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= 0.2)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 

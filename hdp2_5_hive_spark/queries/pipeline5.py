@@ -1579,7 +1579,7 @@ def ann_pq_rerank_recall(spark, t):
     introduce them (same 100-pair sha256-planted corpus as
     ann_pq_recall)."""
     from ..operators import quantize as qz
-    from ..operators.similarity import cosine_col
+    from ..operators.similarity import cosine_from_norms, with_norm
     from .pipeline4 import _planted_df
     from pyspark.sql import Window as W
 
@@ -1621,13 +1621,21 @@ def ann_pq_rerank_recall(spark, t):
         .filter(F.col("sl_rank") <= 5)
         .select("query_id", "neighbor_id")
     )
-    qv = df.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
+    qv = with_norm(
+        df.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
+        ),
+        "q_vec",
+        "q_norm",
     )
-    cv = df.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_vec"),
+    cv = with_norm(
+        df.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
+        ),
+        "c_vec",
+        "c_norm",
     )
     rer = (
         shortlist.join(cv, "neighbor_id")
@@ -1636,7 +1644,10 @@ def ann_pq_rerank_recall(spark, t):
         .select(
             "query_id",
             "neighbor_id",
-            cosine_col(F.col("q_vec"), F.col("c_vec")).alias("cos"),
+            cosine_from_norms(
+                F.col("q_vec"), F.col("c_vec"),
+                F.col("q_norm"), F.col("c_norm"),
+            ).alias("cos"),
         )
         .withColumn(
             "rn",

@@ -4,10 +4,13 @@ For each named query: fresh timing in THIS session — one untimed
 warmup execution into the noop sink, then best-of-2 timed runs — plus
 the Spark job/stage/task counts of one execution (statusTracker
 deltas), which is the footprint that job-count-bound iterative
-operators (trainers, CC rounds) optimize for.
+operators (trainers, CC rounds) optimize for. ``serial_stages`` counts
+the stages that ran exactly one task while the cluster offers more
+(defaultParallelism > 1): an under-split input running on one core.
 
 Usage: python scripts/op_profile.py [sf_dir] name [name ...]
-Prints one line per query:  name  best_s  jobs=N stages=N tasks=N
+Prints one line per query:
+  name  build= warm= best=  jobs=N stages=N tasks=N serial_stages=N
 """
 
 from __future__ import annotations
@@ -40,6 +43,8 @@ def profile(spark, fn, sf_dir, runs: int = 2):
     new_jobs = [j for j in jobs1 if j not in jobs0]
     n_stages = 0
     n_tasks = 0
+    n_serial = 0
+    wide = sc.defaultParallelism > 1
     for j in new_jobs:
         info = tracker0.getJobInfo(j)
         if info.nonEmpty():
@@ -48,7 +53,10 @@ def profile(spark, fn, sf_dir, runs: int = 2):
             for s in sids:
                 si = tracker0.getStageInfo(s)
                 if si.nonEmpty():
-                    n_tasks += si.get().numTasks()
+                    stage_tasks = si.get().numTasks()
+                    n_tasks += stage_tasks
+                    if wide and stage_tasks == 1:
+                        n_serial += 1
     best = float("inf")
     for _ in range(runs):
         # rebuild the frame so driver-side trainer work is re-timed
@@ -58,7 +66,7 @@ def profile(spark, fn, sf_dir, runs: int = 2):
         t0 = time.time()
         df.write.format("noop").mode("overwrite").save()
         best = min(best, time.time() - t0)
-    return build_s, warm_s, best, len(new_jobs), n_stages, n_tasks
+    return build_s, warm_s, best, len(new_jobs), n_stages, n_tasks, n_serial
 
 
 def main():
@@ -77,10 +85,10 @@ def main():
     for name in args:
         spark.sparkContext.setJobDescription(f"profile:{name}")
         try:
-            b, w, best, nj, ns, nt = profile(spark, qs[name].fn, sf_dir)
+            b, w, best, nj, ns, nt, n1 = profile(spark, qs[name].fn, sf_dir)
             print(
                 f"{name:40s} build={b:6.2f}s warm={w:6.2f}s best={best:6.2f}s"
-                f"  jobs={nj} stages={ns} tasks={nt}",
+                f"  jobs={nj} stages={ns} tasks={nt} serial_stages={n1}",
                 flush=True,
             )
         except Exception as e:

@@ -171,6 +171,41 @@ def test_jaccard_prefix_join_never_cartesian(spark, sf_dir, qs):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def _plan_nodes(node):
+    yield node
+    it = node.children().iterator()
+    while it.hasNext():
+        yield from _plan_nodes(it.next())
+
+
+def test_embedding_cosine_join_is_split_and_folds_no_norm(spark, sf_dir, qs):
+    """dedup_embedding_cosine's all-pairs nested-loop join: the
+    streamed side sits under a shuffle (the 500-row slice is one
+    split, and unsplit it runs the whole quadratic in one task), and
+    the join condition folds only the pair's dot product — norms are
+    per-vector columns (``transform`` appears only in ``norm_col``)."""
+    df = qs["dedup_embedding_cosine"].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan()
+    if "AdaptiveSparkPlan" in plan.getClass().getSimpleName():
+        plan = plan.inputPlan()
+    joins = [
+        n
+        for n in _plan_nodes(plan)
+        if n.getClass().getSimpleName() == "BroadcastNestedLoopJoinExec"
+    ]
+    assert len(joins) == 1, plan.toString()
+    join = joins[0]
+    cond = join.condition().get().toString()
+    assert "zip_with(" in cond and "transform(" not in cond, cond
+    if spark.sparkContext.defaultParallelism > 1:
+        build_right = join.buildSide().toString() == "BuildRight"
+        streamed = join.left() if build_right else join.right()
+        assert any(
+            n.getClass().getSimpleName() == "ShuffleExchangeExec"
+            for n in _plan_nodes(streamed)
+        ), plan.toString()
+
+
 def test_span_dup_stats_three_exchanges_no_strings(spark, sf_dir):
     """Duplicated-span coverage shuffles exactly three times — gram
     hash groupBy (dup set), gram hash join (flagging), doc window +
