@@ -3,16 +3,21 @@ table — the lexical complement of operators/similarity.py's embedding
 ANN (SURVEY §2.14 similarity-search extension).
 
 Scale shape (100 TB corpus, small query set):
-- Per-doc term frequencies are one explode + keyed partial agg —
-  the shuffle carries (doc, term, tf), collapsed map-side.
-- Document frequencies reuse the same table: groupBy(term) partial
-  agg — one row per distinct term.
-- Corpus scalars (N, average doc length) are single-row aggregates
-  broadcast via crossJoin, NOT an empty-frame window (which would
-  funnel the corpus through one partition).
+- The corpus is hash-split on the doc id ONCE (``_split_docs``), and
+  every corpus-side product reads that one exchange: the doc length
+  is a window sum over ``partitionBy(id)``, the term frequencies are
+  a ``groupBy(id, term, dl)`` that the split already satisfies, and
+  the corpus scalars (N, average doc length) are a keyed aggregate
+  on the same split feeding one single-row aggregate. Nothing is
+  persisted: the planner reuses the exchange across consumers (on
+  well-split input the scalars read a second, narrow exchange; see
+  ``_split_docs``).
+- Document frequencies reuse the tf table: groupBy(term) partial
+  agg over the query vocabulary only — one row per query term.
+- Corpus scalars are broadcast via crossJoin, NOT an empty-frame
+  window (which would funnel the corpus through one partition).
 - The query side is tiny by construction → broadcast hash join on
-  term; the corpus table never shuffles for scoring, only the
-  (doc, query) partial sums do.
+  term; only the (doc, query) partial sums shuffle for scoring.
 
 Everything is built-in expressions; ln() runs JVM-side and the final
 score is rounded so cross-engine libm ulp noise cannot surface.
@@ -20,23 +25,63 @@ score is rounded so cross-engine libm ulp noise cannot surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import words_col
-from .util import materialize
+from .util import ensure_parallelism
 
 
-def term_frequencies(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, term, tf, dl): per-document term counts + doc length."""
-    from .util import ensure_parallelism
+def _split_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, text, dl): the corpus hash-split on ``id_col`` once, each
+    row carrying its id's length ``dl`` — the token count summed over
+    all of the id's rows. ``dl`` is null for a null id and for an id
+    whose texts are all null (``array_size`` of a null array is null,
+    where ``size`` would give -1).
 
-    words = ensure_parallelism(df).select(
-        F.col(id_col), F.explode(words_col(F.col(text_col))).alias("term")
+    The window is keyed on the id alone, so tf (``groupBy(id, term,
+    dl)``) and the scalars' ``groupBy(id)`` need no shuffle of their
+    own. Under-split input is split by ``ensure_parallelism`` below
+    the token count, so every consumer reads ONE exchange of (id,
+    text). Well-split input is left as it is and the window brings
+    its own exchange; there the scalars, which never read the text,
+    prune it and read a second, narrow exchange of (id, token count).
+    Null ids are kept here: the scalars count their rows, and the tf
+    side drops them with a filter on ``dl``, a window output, which
+    the optimizer cannot push below the split (a filter on the id
+    would be pushed there and fork the split into two exchanges)."""
+    split = ensure_parallelism(df.select(id_col, text_col), by=[id_col])
+    n_tok = F.array_size(words_col(F.col(text_col)))
+    dl = F.sum(F.when(F.col(id_col).isNotNull(), n_tok)).over(
+        Window.partitionBy(id_col)
     )
-    tf = words.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    dl = words.groupBy(id_col).agg(F.count("*").alias("dl"))
-    return tf.join(dl, id_col)
+    return split.select(id_col, text_col, dl.alias("dl"))
+
+
+def term_frequencies(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, term, tf, dl): per-document term counts + doc length over
+    ``_split_docs`` output, for every non-null id (rows sharing an id
+    count as one document)."""
+    return (
+        docs.filter(F.col("dl").isNotNull())
+        .select(
+            id_col, "dl", F.explode(words_col(F.col(text_col))).alias("term")
+        )
+        .groupBy(id_col, "term", "dl")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .select(id_col, "term", "tf", "dl")
+    )
+
+
+def _corpus_stats(docs: DataFrame, id_col: str) -> DataFrame:
+    """One row (n_docs, avgdl): n_docs counts every corpus row (null
+    ids and duplicate ids included); avgdl averages ``dl`` over the
+    non-null ids with at least one token."""
+    return (
+        docs.groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("n"), F.max("dl").alias("dl"))
+        .agg(F.sum("n").alias("n_docs"), F.avg("dl").alias("avgdl"))
+    )
 
 
 def bm25_scores(
@@ -54,22 +99,9 @@ def bm25_scores(
 
     Returns (query_id, doc_id, score) with score rounded to 4 dp.
     """
-    # Lazy persist, NOT the eager localCheckpoint rm3 uses: re-
-    # measured in r14 — with only three tf consumers here the eager
-    # materialization cost exceeds the replay savings (cold build
-    # 3.5s -> 11.1s, warm 2.8s -> 3.4s on retrieval_bm25), the
-    # opposite outcome from rm3's ~11 consumers. The tf table feeds
-    # three consumers (corpus scalars, document frequencies, scoring).
-    tf = materialize(
-        term_frequencies(corpus, id_col, text_col), "retrieval.bm25_tf"
-    )
-    stats = corpus.select(
-        F.count("*").alias("n_docs")
-    ).crossJoin(
-        tf.select(id_col, "dl")
-        .distinct()
-        .select(F.avg("dl").alias("avgdl"))
-    )
+    docs = _split_docs(corpus, id_col, text_col)
+    tf = term_frequencies(docs, id_col, text_col)
+    stats = _corpus_stats(docs, id_col)
     q_terms = queries.select(
         F.col(query_id_col),
         F.explode(F.array_distinct(words_col(F.col(text_col)))).alias("term"),
@@ -134,10 +166,11 @@ def rm3_expand_rescore(
     DECIMAL(38,6) before the final sum, so the score is exact and
     order-independent — the SQL oracle replays it bit-for-bit.
 
-    Scale shape: two broadcast-probe scoring passes over the
-    persisted corpus tf table (never shuffling the corpus), a per-
-    query WindowGroupLimit for feedback docs and expansion terms —
-    everything that moves is query-sized.
+    Scale shape: the corpus is split on the doc id (as in
+    bm25_scores) once for the checkpointed tf table and once for the
+    corpus scalars; then two broadcast-probe scoring passes over the
+    tf table and a per-query WindowGroupLimit for feedback docs and
+    expansion terms — everything else that moves is query-sized.
 
     Retention: the corpus tf table is an eager local checkpoint, not
     a ``materialize`` persist, so a call does not release the previous
@@ -146,8 +179,6 @@ def rm3_expand_rescore(
     reachable, and until the next JVM GC after that; a long-lived
     session that keeps several results keeps one corpus-sized tf
     table per result."""
-    from pyspark.sql import Window
-
     # The tf table feeds ~11 subtree copies across the two scoring
     # passes + feedback mining (the static plan inlined 148 corpus
     # scans, 0 ReusedExchange). r13's A/B rejected .persist() (2x
@@ -158,14 +189,9 @@ def rm3_expand_rescore(
     # -> 11.0s on a 50-query probe at sf0.1. At warehouse scale this
     # trades one materialization of the term table against ~11 full
     # corpus re-reads (retention: see the docstring).
-    tf = term_frequencies(corpus, id_col, text_col).localCheckpoint(
-        eager=True
-    )
-    stats = corpus.select(F.count("*").alias("n_docs")).crossJoin(
-        tf.select(id_col, "dl")
-        .distinct()
-        .select(F.avg("dl").alias("avgdl"))
-    )
+    docs = _split_docs(corpus, id_col, text_col)
+    tf = term_frequencies(docs, id_col, text_col).localCheckpoint(eager=True)
+    stats = _corpus_stats(docs, id_col)
     q_terms = queries.select(
         F.col(query_id_col),
         F.explode(

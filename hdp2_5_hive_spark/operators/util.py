@@ -51,12 +51,18 @@ def ensure_parallelism(
     only triggers on pathologically under-split inputs.
 
     ``by``: when the consumer is keyed on these columns (a groupBy /
-    join), hash-repartition on them instead of round-robin — the
-    downstream operator then REUSES this exchange (guide §2.4: two
-    operations keyed the same way share one shuffle), where a
+    join / window), hash-repartition on them instead of round-robin
+    — the downstream operator then REUSES this exchange (guide §2.4:
+    two operations keyed the same way share one shuffle), where a
     round-robin split would both add a second exchange and destroy
     any key clustering the scan order carried (measured on the
     150k-group q18 aggregate: 1.98s round-robin vs 0.49s keyed).
+    The keyed split takes an explicit count,
+    ``spark.sql.shuffle.partitions``: a column-only ``repartition``
+    is one AQE may coalesce, and on a small input it folds the split
+    back into ONE task — the under-split shape this function exists
+    to remove. With the count the split is the shuffle-partition
+    hash layout the keyed consumer asks for, and AQE leaves it.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
@@ -81,13 +87,8 @@ def ensure_parallelism(
         n_parts = df.rdd.getNumPartitions()
     if n_parts < max(1, int(target * min_factor)):
         if by:
-            # No explicit partition count: hashpartitioning(by,
-            # spark.sql.shuffle.partitions) exactly matches the
-            # downstream keyed operator's required distribution, so
-            # the plan carries ONE exchange at any core count.
-            from pyspark.sql import functions as F
-
-            return df.repartition(*[F.col(c) for c in by])
+            n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            return df.repartition(n, *by)
         return df.repartition(target)
     return df
 

@@ -233,9 +233,10 @@ GROUP BY 1, 2
 def retrieval_bm25(spark, t):
     """BM25 lexical retrieval (operators/retrieval.py): docs with
     doc_id < 5 act as queries against the rest of the corpus. The
-    corpus never shuffles for scoring — query terms, their document
-    frequencies, and the corpus scalars all broadcast; only the
-    (query, doc) partial sums exchange."""
+    corpus shuffles once, split on doc_id, and tf, doc lengths and
+    the corpus scalars all read that split; query terms, their
+    document frequencies and the scalars broadcast, and only the
+    (query, doc) partial sums exchange for scoring."""
     from ..operators import retrieval as rt
 
     d = t.documents

@@ -849,12 +849,12 @@ def retrieval_rrf_hybrid(spark, t):
     a FULL OUTER join on (query, doc) unions the candidate sets, and
     rrf = Σ 1/(60+rank) over the signals present — rounded to 6 dp
     BEFORE the final ranking so the order is ulp-robust across
-    engines. Plan: the BM25 side never shuffles the corpus (broadcast
-    query terms/dfs/scalars, one keyed partial-sum exchange); the
-    cosine side broadcasts the 5 query vectors; fusion is a keyed
-    (query, doc) join of two ≤20-row-per-query rank lists — at 100 TB
-    both rank lists are corpus-independent sizes, so fusion cost is
-    O(queries · k), not corpus-sized."""
+    engines. Plan: the BM25 side splits the corpus once on doc_id
+    (broadcast query terms/dfs/scalars, one keyed partial-sum
+    exchange); the cosine side broadcasts the 5 query vectors; fusion
+    is a keyed (query, doc) join of two ≤20-row-per-query rank lists —
+    at 100 TB both rank lists are corpus-independent sizes, so fusion
+    cost is O(queries · k), not corpus-sized."""
     from pyspark.sql import Window as W
 
     from ..operators import retrieval as rt

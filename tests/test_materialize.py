@@ -1,7 +1,8 @@
 """Cache lifetimes of ``operators.util.materialize``: every operator
 that persists a table across calls keeps exactly one copy per table
-(last call wins), a same-plan repeat call keeps its table cached, and
-a frame built on a released table still returns its rows."""
+(last call wins), a same-plan repeat call keeps its table cached, a
+frame built on a released table still returns its rows, and operators
+that need no cross-call table leave nothing persisted."""
 
 from __future__ import annotations
 
@@ -50,8 +51,7 @@ def _variant(df, i):
     return df.filter(F.col(df.columns[0]).cast("string") != F.lit(f"~{i}"))
 
 
-def _bm25(docs, i=0):
-    docs = _variant(docs, i)
+def _bm25(docs):
     queries = docs.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), "text"
     )
@@ -116,7 +116,6 @@ OPERATORS = {
         _variant(docs, i), F.col("doc_id") % 2 == 0, "doc_id", "text",
         n_buckets=64,
     ),
-    "retrieval": lambda spark, docs, i, **_: _bm25(docs, i),
     "phash": lambda spark, docs, i, **_: ph.phash_near_pairs(
         _variant(_images(spark), i)
     ),
@@ -138,14 +137,24 @@ OPERATORS = {
 
 
 def test_same_plan_repeat_call_keeps_its_table_cached(spark, docs):
-    """The second call releases the first call's tf table BEFORE it
+    """The second call releases the first call's band table BEFORE it
     persists its own: released after, the same-plan uncache would
-    drop the new entry too and every consumer would recompute tf."""
+    drop the new entry too and both join sides would recompute the
+    shingle and signature pipeline."""
     spark.catalog.clearCache()
-    _bm25(docs).collect()
-    _bm25(docs).collect()
-    tf = _materialized["retrieval.bm25_tf"]
-    assert tf.storageLevel != StorageLevel.NONE
+    dd.lsh_candidate_pairs(docs, "doc_id", "text").collect()
+    dd.lsh_candidate_pairs(docs, "doc_id", "text").collect()
+    bands = _materialized["dedup.lsh_bands"]
+    assert bands.storageLevel != StorageLevel.NONE
+
+
+def test_bm25_persists_nothing(spark, docs):
+    """bm25_scores shares one keyed split of the corpus between its
+    consumers through exchange reuse; it holds no table."""
+    spark.catalog.clearCache()
+    baseline = _persisted_ids(spark)
+    assert _bm25(docs).collect()
+    assert _persisted_ids(spark) - baseline == set()
 
 
 @pytest.mark.parametrize("module", sorted(OPERATORS))

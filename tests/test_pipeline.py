@@ -737,6 +737,70 @@ def test_rm3_expansion_changes_ranking(spark):
     assert second[10] > second[11] > 0
 
 
+def _bm25_reference(corpus, queries, k1=1.2, b=0.75):
+    """Pure-Python BM25 over (doc_id, text) and (query_id, text) rows,
+    unrounded: tokens are ``text.lower().split(" ")``; n_docs counts
+    every corpus row; a non-null id's tf and dl sum over all of its
+    rows; avgdl averages dl over the non-null ids with a token; df
+    counts the non-null ids containing the term."""
+    import math
+    from collections import Counter
+
+    tf: dict = {}
+    for doc_id, text in corpus:
+        if doc_id is not None and text is not None:
+            tf.setdefault(doc_id, Counter()).update(text.lower().split(" "))
+    dl = {i: sum(c.values()) for i, c in tf.items()}
+    avgdl = sum(dl.values()) / len(dl)
+    df = Counter(term for c in tf.values() for term in c)
+    n_docs = len(corpus)
+    out: dict = {}
+    for qid, text in queries:
+        for term in set(text.lower().split(" ")):
+            if term not in df:
+                continue
+            idf = math.log(1.0 + (n_docs - df[term] + 0.5) / (df[term] + 0.5))
+            for i, c in tf.items():
+                if term in c:
+                    t = c[term]
+                    part = t * (k1 + 1) / (t + k1 * (1 - b + b * dl[i] / avgdl))
+                    out[(qid, i)] = out.get((qid, i), 0.0) + idf * part
+    return out
+
+
+def test_bm25_edge_cases_match_reference(spark):
+    """Null text, a null doc_id, a duplicated doc_id (one of its rows
+    with null text), an empty string and runs of spaces (whose empty
+    tokens are terms, as in ``split``): the scores equal the reference
+    to within the 4-dp rounding, so a null text counted as -1 tokens
+    (``size(null)``) in a doc length or in avgdl shows up."""
+    from hdp2_5_hive_spark.operators.retrieval import bm25_scores
+
+    corpus = [
+        (1, "the cat sat on the mat"),
+        (2, "The dog  sat   down"),
+        (3, None),
+        (None, "cat dog bird"),
+        (4, "cat cat bird"),
+        (4, "dog"),
+        (4, None),
+        (5, ""),
+        (6, "bird watching  is fun"),
+    ]
+    queries = [(100, "cat sat"), (101, "dog  bird"), (102, "mat fun")]
+    got = {
+        (r.query_id, r.doc_id): r.score
+        for r in bm25_scores(
+            spark.createDataFrame(corpus, "doc_id long, text string"),
+            spark.createDataFrame(queries, "query_id long, text string"),
+        ).collect()
+    }
+    want = _bm25_reference(corpus, queries)
+    assert set(got) == set(want)
+    for key, score in want.items():
+        assert abs(got[key] - score) <= 5e-5 + 1e-9, (key, got[key], score)
+
+
 def test_planted_df_matches_list_path(spark):
     """_planted_df (Arrow/pandas construction — no pickled-row Python
     scan per action) must produce bit-identical rows to the original

@@ -957,6 +957,60 @@ def test_rrf_hybrid_never_shuffles_corpus_for_broadcastable_sides(
     assert "rangepartitioning" not in plan, plan
 
 
+def _final_plan_nodes(node, parent=None):
+    """(node, parent) over an executed adaptive plan, descending into
+    query stages (whose ``plan`` is not a child) but not into reused
+    exchanges."""
+    yield node, parent
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _final_plan_nodes(node.executedPlan(), node)
+    elif name.endswith("QueryStageExec"):
+        yield from _final_plan_nodes(node.plan(), node)
+    elif name != "ReusedExchangeExec":
+        it = node.children().iterator()
+        while it.hasNext():
+            yield from _final_plan_nodes(it.next(), node)
+
+
+def _is_doc_id_split(node) -> bool:
+    """A shuffle (or a reuse of one) hash-partitioned on doc_id."""
+    return node.getClass().getSimpleName() in (
+        "ShuffleExchangeExec",
+        "ReusedExchangeExec",
+    ) and node.outputPartitioning().toString().startswith("hashpartitioning(doc_id#")
+
+
+def test_bm25_eval_splits_the_corpus_once(spark, sf_dir, qs):
+    """retrieval_bm25_eval: tf, doc lengths and the corpus scalars all
+    read ONE keyed split of the corpus (the other readers are reused
+    exchanges), nothing is cached, and on more than one core every
+    read of the split spans more than one partition (AQE did not
+    coalesce it into one task)."""
+    df = qs["retrieval_bm25_eval"].fn(spark, sf_dir)
+    df.collect()
+    nodes = list(_final_plan_nodes(df._jdf.queryExecution().executedPlan()))
+    names = [n.getClass().getSimpleName() for n, _ in nodes]
+    assert "InMemoryTableScanExec" not in names, names
+    splits = [n for n, _ in nodes if _is_doc_id_split(n)]
+    fresh = [n for n in splits if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    assert len(fresh) == 1, [n.toString() for n in splits]
+    assert len(splits) > 1, "no consumer reuses the split"
+    below = [n.getClass().getSimpleName() for n, _ in _final_plan_nodes(fresh[0].child())]
+    assert "FileSourceScanExec" in below, below
+    assert not any("Exchange" in b or "QueryStage" in b for b in below), below
+    if spark.sparkContext.defaultParallelism > 1:
+        reads = [
+            (p if p.getClass().getSimpleName() == "AQEShuffleReadExec" else n)
+            for n, p in nodes
+            if n.getClass().getSimpleName() == "ShuffleQueryStageExec"
+            and _is_doc_id_split(n.plan())
+        ]
+        assert reads
+        widths = [r.outputPartitioning().numPartitions() for r in reads]
+        assert min(widths) > 1, widths
+
+
 def test_url_dedup_single_aggregate_no_join(spark, sf_dir, qs):
     """corpus_url_dedup is ONE hash aggregate over a map-side
     canonicalization — any join or range partitioning is a planning

@@ -5,6 +5,7 @@ future Spark hiding the JVM queryExecution internals)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hdp2_5_hive_spark.operators.util import ensure_parallelism
@@ -31,6 +32,22 @@ def test_leaves_adaptive_plan_untouched(spark):
 def test_leaves_wellsplit_input_untouched(spark):
     df = spark.range(0, 10_000, 1, 32)
     assert ensure_parallelism(df) is df
+
+
+def test_keyed_split_survives_aqe_coalescing(spark):
+    """A keyed split of a one-split input is the layout its keyed
+    consumer reuses, with the shuffle-partition count: AQE may not
+    coalesce it back into the single task the split was meant to
+    remove, so the downstream ``groupBy("k")`` runs in more than one
+    task."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("needs more than one core")
+    df = spark.range(0, 10_000).coalesce(1).select(
+        (F.col("id") % 97).alias("k")
+    )
+    out = ensure_parallelism(df, by=["k"]).groupBy("k").count()
+    parts = {r.p for r in out.select(F.spark_partition_id().alias("p")).collect()}
+    assert len(parts) > 1, parts
 
 
 def test_fallback_to_public_api(spark):
